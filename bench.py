@@ -246,7 +246,7 @@ def emit(
     contract is unchanged; only the side-channel filename varies."""
     total = round(sum(timings.values()), 3)
     total_min = round(sum(minima.values()), 3)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     full = {
         "metric": "headline_queries_total",
         "value": total,

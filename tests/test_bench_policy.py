@@ -119,3 +119,71 @@ class TestEmitTailBudget:
         line = bench.emit({"a": 1.0}, {"a": 1.0}, 0.1)
         assert written["dst"].endswith("bench_full_c8.json")
         assert json.loads(line)["detail"] == "bench_full_c8.json"
+
+    def test_unset_core_count_defaults_to_the_machine(self, monkeypatch):
+        """With $SPARK_GRAFT_CPUS unset, the run is named by the machine's
+        own core count, not a fixed 32."""
+        import json
+
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        monkeypatch.setattr(bench.os, "cpu_count", lambda: 3)
+        written = {}
+
+        def fake_replace(tmp, dst):
+            written["dst"] = dst
+            bench.os.unlink(tmp)
+
+        monkeypatch.setattr(bench.os, "replace", fake_replace)
+        line = bench.emit({"a": 1.0}, {"a": 1.0}, 0.1)
+        assert written["dst"].endswith("bench_full_c3.json")
+        assert json.loads(line)["detail"] == "bench_full_c3.json"
+
+
+class TestSessionCoreCount:
+    """session.session() sizes ``local[N]`` and the shuffle partitions
+    from $SPARK_GRAFT_CPUS, or the machine's core count when unset."""
+
+    @staticmethod
+    def _built(monkeypatch):
+        import importlib
+
+        sess = importlib.import_module("virapipe_spark.session")
+        seen = {}
+
+        class Builder:
+            def appName(self, name):
+                return self
+
+            def master(self, m):
+                seen["master"] = m
+                return self
+
+            def config(self, k, v):
+                seen[k] = v
+                return self
+
+            def getOrCreate(self):
+                raise RuntimeError("stop before launching a JVM")
+
+        class FakeSparkSession:
+            builder = Builder()
+
+        monkeypatch.setattr(sess, "SparkSession", FakeSparkSession)
+        try:
+            sess.session()
+        except RuntimeError:
+            pass
+        return seen
+
+    def test_unset_core_count_defaults_to_the_machine(self, monkeypatch):
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        monkeypatch.setattr("os.cpu_count", lambda: 3)
+        seen = self._built(monkeypatch)
+        assert seen["master"] == "local[3]"
+        assert seen["spark.sql.shuffle.partitions"] == "3"
+
+    def test_core_count_comes_from_the_environment(self, monkeypatch):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+        seen = self._built(monkeypatch)
+        assert seen["master"] == "local[5]"
+        assert seen["spark.sql.shuffle.partitions"] == "5"

@@ -13,6 +13,7 @@ rounds 1-3.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from virapipe_spark import catalog
@@ -60,100 +61,10 @@ class TestDriverWindow:
         assert "c" not in proven  # latest check crashed -> demoted
         assert proven.get("d") == 1  # rows-only pass counts
 
-    def test_window_rotation_simulated_rounds_8_to_11(self, tmp_path):
-        """Prove the window math stays exact through the r9/r10 staged
-        flips, four promotion generations deep (r8 VERDICT item 7).
-
-        Simulates the driver loop against the REAL rank/sort
-        (catalog._ranked), the REAL artifact parser
-        (catalog._verified_rounds), the REAL history (r1-r7 artifacts
-        copied verbatim), and the REAL staged generations' registration
-        order — only the driver's per-round artifact WRITES are
-        synthetic (optimistic all-green path). Asserts, per round:
-        every never-proven live entry sits inside the first-50 window,
-        the flip rounds' windows are exactly the newly-promoted sets
-        (r9: all 50 staged-r9 names), and once the backlog clears
-        (r11), the window rotates to the 50 least-recently-proven by
-        (round, registration order)."""
-        import glob
-        import json
-        import shutil
-
-        catalog.load_all()
-        from virapipe_spark.queries import staged
-
-        if staged.R9_PROMOTED or staged.R10_PROMOTED:
-            import pytest
-
-            pytest.skip("staged r9/r10 already live; simulation obsolete")
-
-        for p in glob.glob("CORRECTNESS_r0[1-7].json"):
-            shutil.copy(p, tmp_path / p)
-        root = str(tmp_path)
-
-        live = list(catalog.QUERIES)  # r8 live set, registration order
-        gen9 = list(staged.STAGED_R9)  # promote_r9 appends in dict order
-        gen10 = list(staged.STAGED_R10)
-        ok = {"rows_match": True, "schema_match": True, "hash_match": True,
-              "spark_rows": 1, "oracle_rows": 1, "err": None}
-
-        def window(names):
-            return catalog._ranked(names, catalog._verified_rounds(root))[
-                :DRIVER_WINDOW
-            ]
-
-        def drive(rnd, names):
-            w = window(names)
-            proven = catalog._verified_rounds(root)
-            unproven = [n for n in names if proven.get(n, 0) == 0]
-            assert set(unproven) <= set(w), (
-                f"round {rnd}: never-proven entries outside the window: "
-                f"{sorted(set(unproven) - set(w))}"
-            )
-            (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
-                json.dumps({n: ok for n in w})
-            )
-            return w
-
-        # round 8: no flip; the window must be exactly the current
-        # never-proven live set (50 of them as of the r7 artifacts).
-        proven7 = catalog._verified_rounds(root)
-        unproven8 = [n for n in live if proven7.get(n, 0) == 0]
-        w8 = drive(8, live)
-        assert len(unproven8) == DRIVER_WINDOW
-        assert set(w8) == set(unproven8)
-
-        # round 9: gen9 flips live (CORRECTNESS_r08 exists). All 50
-        # promoted entries are never-proven -> they ARE the window.
-        w9 = drive(9, live + gen9)
-        assert set(w9) == set(gen9)
-
-        # round 10: gen10 flips live (38 entries). Window = gen10 plus
-        # the least-recently-proven filler, ranked by (round,
-        # registration order) — computed here independently of _ranked.
-        names10 = live + gen9 + gen10
-        proven9 = catalog._verified_rounds(root)
-        filler = sorted(
-            (n for n in names10 if n not in gen10),
-            key=lambda n: (proven9[n], names10.index(n)),
-        )[: DRIVER_WINDOW - len(gen10)]
-        w10 = drive(10, names10)
-        assert set(w10) == set(gen10) | set(filler)
-
-        # round 11: no flip, nothing unproven anywhere — pure rotation
-        # to the 50 least-recently-proven.
-        proven10 = catalog._verified_rounds(root)
-        assert all(proven10.get(n, 0) > 0 for n in names10)
-        expect11 = sorted(
-            names10, key=lambda n: (proven10[n], names10.index(n))
-        )[:DRIVER_WINDOW]
-        w11 = drive(11, names10)
-        assert w11 == expect11
-
     def test_rewritten_after_proof_ranks_after_never_proven(self):
         """An entry rewritten after its latest driver proof must rank
-        0.5 — behind every never-proven entry (flip rounds own the full
-        window) but ahead of every valid proof — and self-heal once a
+        0.5 — behind every never-proven entry (which has first claim on
+        the window) but ahead of every valid proof — and self-heal once a
         proof at-or-after the rewrite round exists (r8 VERDICT item 2)."""
         proven = {"a": 7, "b": 3, "c": 9, "e": 7}
         rewritten = {"a": 8, "d": 8, "e": 7}
@@ -163,8 +74,8 @@ class TestDriverWindow:
         assert order == ["d", "a", "b", "e", "c"]
 
     def test_live_rewritten_entries_queue_directly_behind_the_window(self):
-        """The five r8-rewritten entries (REWRITTEN_IN) must exist in
-        the live catalog and — while their proofs predate the rewrite —
+        """Every rewritten entry (REWRITTEN_IN) must exist in the live
+        catalog and — while their proofs predate the rewrite —
         sort immediately after the never-proven block, so they re-prove
         the first round with spare window slots."""
         catalog.load_all()
@@ -178,19 +89,7 @@ class TestDriverWindow:
         )
         if not pending:
             return  # all re-proven; nothing to queue
-        # the rank-0 block is never-proven PLUS any STALE_SUSPECT entry
-        # whose proof predates the drift round — count it the way
-        # _ranked does, or a future stale re-proof would shift the
-        # slice and fail this test spuriously (r9 review)
-        n_zero = sum(
-            1
-            for n in ordered
-            if proven.get(n, 0) == 0
-            or (
-                n in catalog.STALE_SUSPECT
-                and proven.get(n, 0) <= catalog._DRIFT_ROUND
-            )
-        )
+        n_zero = sum(1 for n in ordered if proven.get(n, 0) == 0)
         block = ordered[n_zero : n_zero + len(pending)]
         assert sorted(block) == pending, (
             f"rewritten-after-proof entries not queued directly behind "
@@ -202,6 +101,134 @@ class TestDriverWindow:
         assert list(catalog.ordered_queries().keys()) != []
         assert set(catalog.ordered_queries()) == set(catalog.QUERIES)
         assert set(catalog.ORACLES) <= set(catalog.QUERIES)
+
+    def test_every_driver_proven_entry_stays_registered(self):
+        """No entry the driver ever proved may drop out of the registry."""
+        catalog.load_all()
+        missing = set(catalog._verified_rounds()) - set(catalog.QUERIES)
+        assert not missing, f"driver-proven entries not registered: {missing}"
+
+    def test_rows_only_entries_match_the_driver_record(self):
+        """Every entry keeps the oracle the driver last compared it
+        against: the rows-only set is exactly the entries whose latest
+        driver row is ``no_oracle``."""
+        import glob
+        import json
+        import os
+
+        catalog.load_all()
+        root = os.path.dirname(os.path.dirname(os.path.abspath(catalog.__file__)))
+        latest_err = {}
+        for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+            with open(path) as f:
+                for name, row in json.load(f).items():
+                    if isinstance(row, dict):
+                        latest_err[name] = row.get("err")
+        driver_rows_only = {n for n, e in latest_err.items() if e == "no_oracle"}
+        assert set(catalog.QUERIES) - set(catalog.ORACLES) == driver_rows_only
+
+    def test_registry_is_grouped_by_since_and_stable(self):
+        """``ordered_queries`` breaks ties by registration order, so that
+        order must be grouped by ``since`` and survive repeated loads."""
+        catalog.load_all()
+        names = list(catalog.QUERIES)
+        since = [catalog._SINCE[n] for n in names]
+        assert since == sorted(since)
+        oracles = list(catalog.ORACLES)
+        assert oracles == [n for n in names if n in catalog.ORACLES]
+        catalog.load_all()
+        assert list(catalog.QUERIES) == names
+        assert list(catalog.ORACLES) == oracles
+
+
+class TestSinceRegistration:
+    """``@catalog.query(..., since=N)`` is the only registration path;
+    ``load_all`` groups the registry by ``since``."""
+
+    @pytest.mark.parametrize(
+        "since,size", [(0, 179), (5, 9), (7, 32), (8, 50), (9, 50), (10, 38), (11, 3)]
+    )
+    def test_each_generation_is_live_and_proven_since_it_went_live(
+        self, since, size
+    ):
+        """Every generation keeps its size, and each of its entries has a
+        driver proof from the round it went live or later."""
+        catalog.load_all()
+        proven = catalog._verified_rounds()
+        gen = [n for n in catalog.QUERIES if catalog._SINCE[n] == since]
+        assert len(gen) == size
+        early = [n for n in gen if proven.get(n, 0) < max(since, 1)]
+        assert not early, f"since={since}: no proof from round {since} on: {early}"
+
+    def test_annotation_entries_lead_each_since_group(self):
+        """``load_all`` imports ``queries.annotation`` first, so inside
+        every ``since`` group its entries come before all others."""
+        from virapipe_spark.queries import annotation
+
+        catalog.load_all()
+        names = list(catalog.QUERIES)
+        for since in set(catalog._SINCE.values()):
+            group = [n for n in names if catalog._SINCE[n] == since]
+            first = [
+                catalog.QUERIES[n].__module__ == annotation.__name__ for n in group
+            ]
+            assert first == sorted(first, reverse=True), (
+                f"since={since}: annotation entries do not lead the group"
+            )
+
+    def test_load_all_reads_no_files(self, monkeypatch):
+        """Registration is declaration data only: no artifact globbing."""
+        import glob
+        import os
+
+        def refuse(*a, **k):
+            raise AssertionError("load_all touched the filesystem")
+
+        monkeypatch.setattr(glob, "glob", refuse)
+        monkeypatch.setattr(glob, "iglob", refuse)
+        monkeypatch.setattr(os, "listdir", refuse)
+        monkeypatch.setattr(os, "scandir", refuse)
+        before = list(catalog.QUERIES)
+        catalog.load_all()
+        assert list(catalog.QUERIES) == before
+
+    def test_since_defaults_to_zero(self, monkeypatch):
+        monkeypatch.setattr(catalog, "QUERIES", dict(catalog.QUERIES))
+        monkeypatch.setattr(catalog, "ORACLES", dict(catalog.ORACLES))
+        monkeypatch.setattr(catalog, "_SINCE", dict(catalog._SINCE))
+
+        @catalog.query("_t_default", oracle="SELECT 1")
+        def _t(spark, sf_dir):
+            return None
+
+        assert catalog._SINCE["_t_default"] == 0
+
+    def test_late_registration_is_sorted_into_its_group(self, monkeypatch):
+        """An entry registered after the load sorts by ``since`` on the
+        next ``load_all``: a since-0 entry ends the since-0 group, a
+        later-round entry goes last, in both registries."""
+        catalog.load_all()
+        monkeypatch.setattr(catalog, "QUERIES", dict(catalog.QUERIES))
+        monkeypatch.setattr(catalog, "ORACLES", dict(catalog.ORACLES))
+        monkeypatch.setattr(catalog, "_SINCE", dict(catalog._SINCE))
+        n0 = sum(1 for s in catalog._SINCE.values() if s == 0)
+        late = max(catalog._SINCE.values()) + 1
+
+        for name, since in (("_t_late", late), ("_t_zero", 0)):
+            catalog.query(name, oracle="SELECT 1", since=since)(lambda s, d: None)
+        catalog.load_all()
+        names = list(catalog.QUERIES)
+        assert names.index("_t_zero") == n0
+        assert names[-1] == "_t_late"
+        oracles = list(catalog.ORACLES)
+        assert oracles == [n for n in names if n in catalog.ORACLES]
+
+    def test_duplicate_name_is_rejected(self):
+        catalog.load_all()
+        name = next(iter(catalog.QUERIES))
+        with pytest.raises(ValueError, match="duplicate query name"):
+            catalog.query(name, since=99)(lambda s, d: None)
+        assert catalog._SINCE[name] != 99
 
 
 class TestOracleDtypeFidelity:
@@ -226,15 +253,8 @@ class TestOracleDtypeFidelity:
             p = f"{sf_dir}/{t}.parquet"
             if __import__("os").path.exists(p):
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        from virapipe_spark.queries.staged import STAGED_R7, STAGED_R8
-
-        audited = dict(catalog.ORACLES)
-        for gen in (STAGED_R7, STAGED_R8):
-            for n, (_fn, o) in gen.items():
-                if o is not None:
-                    audited.setdefault(n, o)
         offenders = []
-        for name, sql in audited.items():
+        for name, sql in catalog.ORACLES.items():
             cols = con.execute(f"DESCRIBE {sql}").fetchall()
             for col, ctype, *_ in cols:
                 if any(l in ctype.upper() for l in self.LOSSY):
@@ -361,18 +381,3 @@ class TestTextOperators:
         n_vecs = catalog.table(spark, sf_dir, "embeddings").count()
         assert sum(r["n_members"] for r in out) == n_vecs
         assert 0 < len(out) <= _KM_C
-
-    def test_stale_suspect_entries_sort_first_until_reproven(self):
-        """The two entries whose r03 proofs predate the r04 TIMESTAMP_NTZ
-        testdata drift must sort inside the window as if unproven — and
-        stop doing so once a post-drift round proves them."""
-        catalog.load_all()
-        ordered = list(catalog.ordered_queries())
-        proven = catalog._verified_rounds()
-        for name in catalog.STALE_SUSPECT:
-            assert name in catalog.QUERIES
-            if proven.get(name, 0) <= catalog._DRIFT_ROUND:
-                assert ordered.index(name) < DRIVER_WINDOW, (
-                    f"{name} has only a pre-drift proof but sorts outside "
-                    "the driver window"
-                )

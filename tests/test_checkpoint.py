@@ -80,7 +80,7 @@ class TestTruncateLineage:
             srcs = spark.createDataFrame([(0,)], ["node"])
             got = {
                 r["node"]: r["dist"]
-                for r in bfs_hops(edges, srcs, max_hops=3, checkpoint_every=1).collect()
+                for r in bfs_hops(edges, srcs, max_hops=3).collect()
             }
             assert got == {0: 0, 1: 1, 2: 2, 3: 3}, got
             spark.stop()

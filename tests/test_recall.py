@@ -84,9 +84,8 @@ class TestPowerIterationDirection:
         the entry)."""
         import numpy as np
 
-        from virapipe_spark.queries.staged import STAGED_R7
-
-        fn, _ = STAGED_R7["embed_power_iteration"]
+        catalog.load_all()
+        fn = catalog.QUERIES["embed_power_iteration"]
         rows = sorted(
             fn(spark, "/root/testdata/sf0.001").collect(),
             key=lambda r: r["d"],
@@ -458,25 +457,15 @@ class TestAlsIndependent:
         distributed solve's objective behavior (the guarantee is the
         solve is EXACT per subproblem)."""
         from virapipe_spark import catalog
-        from virapipe_spark.queries import staged as st
 
         catalog.load_all()
-        st.promote_r8()
-        try:
-            sf = "/root/testdata/sf0.001"
-            row = catalog.QUERIES["embed_als_factorize"](spark, sf).collect()[0]
-            assert row["u_step_ok"] and row["v_step_ok"]
-            assert row["obj_after_v"] <= row["obj_after_u"] <= row["obj_init"]
-            assert row["rmse"] > 0
-            row2 = catalog.QUERIES["embed_als_factorize"](spark, sf).collect()[0]
-            assert row.asDict() == row2.asDict()
-        finally:
-            from virapipe_spark.queries.staged import STAGED_R8
-
-            for n in STAGED_R8:
-                catalog.QUERIES.pop(n, None)
-                catalog.ORACLES.pop(n, None)
-            st.R8_PROMOTED = False
+        sf = "/root/testdata/sf0.001"
+        row = catalog.QUERIES["embed_als_factorize"](spark, sf).collect()[0]
+        assert row["u_step_ok"] and row["v_step_ok"]
+        assert row["obj_after_v"] <= row["obj_after_u"] <= row["obj_init"]
+        assert row["rmse"] > 0
+        row2 = catalog.QUERIES["embed_als_factorize"](spark, sf).collect()[0]
+        assert row.asDict() == row2.asDict()
 
     def test_closed_form_solve_is_exact_for_its_subproblem(self):
         """The per-key ridge solve minimizes ||A x - r||^2 +
@@ -822,31 +811,14 @@ class TestBipartiteFinishIndependent:
             bfs_hops,
             connected_components_doubling,
         )
-        from virapipe_spark.queries import staged as st
         from virapipe_spark.queries.relational import _order_pair_counts
 
         catalog.load_all()
-        # suite-order robustness: promote the staged-r9 generation on
-        # demand and restore prior state (the ALS-twin cleanup idiom)
-        promoted_here = not st.R9_PROMOTED
-        if promoted_here:
-            st.promote_r9()
-        try:
-            sf = "/root/testdata/sf0.001"
-            got = sorted(
-                tuple(r)
-                for r in catalog.QUERIES["graph_bipartite_check"](
-                    spark, sf
-                ).collect()
-            )
-        finally:
-            if promoted_here:
-                from virapipe_spark.queries.staged import STAGED_R9
-
-                for n in STAGED_R9:
-                    catalog.QUERIES.pop(n, None)
-                    catalog.ORACLES.pop(n, None)
-                st.R9_PROMOTED = False
+        sf = "/root/testdata/sf0.001"
+        got = sorted(
+            tuple(r)
+            for r in catalog.QUERIES["graph_bipartite_check"](spark, sf).collect()
+        )
 
         # the pre-r12 distributed form, verbatim
         li = (
@@ -959,31 +931,13 @@ class TestSsspFinishIndependent:
 
         from virapipe_spark import catalog
         from virapipe_spark.graph import sssp
-        from virapipe_spark.queries import staged as st
 
         catalog.load_all()
-        # suite-order robustness: an earlier test may have de-promoted
-        # the staged-r8 generation (the ALS twin's cleanup idiom) —
-        # promote on demand and restore the prior state afterwards
-        promoted_here = not st.R8_PROMOTED
-        if promoted_here:
-            st.promote_r8()
-        try:
-            sf = "/root/testdata/sf0.001"
-            got = sorted(
-                tuple(r)
-                for r in catalog.QUERIES["graph_sssp_weighted"](
-                    spark, sf
-                ).collect()
-            )
-        finally:
-            if promoted_here:
-                from virapipe_spark.queries.staged import STAGED_R8
-
-                for n in STAGED_R8:
-                    catalog.QUERIES.pop(n, None)
-                    catalog.ORACLES.pop(n, None)
-                st.R8_PROMOTED = False
+        sf = "/root/testdata/sf0.001"
+        got = sorted(
+            tuple(r)
+            for r in catalog.QUERIES["graph_sssp_weighted"](spark, sf).collect()
+        )
 
         # the pre-r12 distributed form, verbatim
         li = (
@@ -2913,7 +2867,7 @@ class TestIntervalJaccardIndependent:
     merge + bp-level set arithmetic over explicit base sets."""
 
     def test_matches_base_sets(self, spark):
-        from virapipe_spark.queries.staged import interval_jaccard
+        from virapipe_spark.queries.annotation import interval_jaccard
 
         sf = "/root/testdata/sf0.001"
         rows = {r.seqid: r for r in interval_jaccard(spark, sf).collect()}

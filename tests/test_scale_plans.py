@@ -20,20 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # per entry, so the audited name list must exist at collection time.
 # load_all() is pure registration (no Spark) — cheap at import.
 catalog.load_all()
-
-
-def _audited_entries():
-    """Live catalog plus every pending staged generation — staged
-    entries are audited BEFORE their flip round so the flip round's
-    sweep is never the first to look (r6 lesson)."""
-    from virapipe_spark.queries.staged import pending_staged
-
-    entries = dict(catalog.QUERIES)
-    entries.update(pending_staged())
-    return entries
-
-
-_AUDITED = _audited_entries()
+_AUDITED = dict(catalog.QUERIES)
 _AUDITED_NAMES = sorted(_AUDITED)
 
 
@@ -159,11 +146,9 @@ class TestPlanProperties:
             # frame broadcast across the vocabulary (limit-1 of an
             # aggregate, the scalar-subquery pattern again)
             "docs_bpe_merge_step",
-            # r6 continuation (staged for the r7 flip; the staged sweep
-            # below audits them BEFORE promotion so the flip round's
-            # catalog sweep can never be the first to look): every one
-            # is the ONE-ROW scalar-aggregate crossJoin pattern —
-            # funnel/count totals (bloom prefilter, minhash recall, DQ
+            # r6 continuation: every one is the ONE-ROW scalar-aggregate
+            # crossJoin pattern — funnel/count totals (bloom prefilter,
+            # minhash recall, DQ
             # audit, AB z-score denominators), rescale/witness scalars
             # (power iteration, ABTT pair moments x2 entries), corpus
             # stats and query-term constants (BM25), revenue/size
@@ -325,7 +310,7 @@ class TestPlanProperties:
 
     @pytest.mark.parametrize("name", _AUDITED_NAMES)
     def test_no_cartesian_anywhere(self, spark, plan_cache, name):
-        """Per-entry sweep over live + staged (see ALLOWED_NLJ above);
+        """Per-entry sweep over the catalog (see ALLOWED_NLJ above);
         plans come from the shared session cache so the 356-entry
         audit builds each plan exactly once across both sweeps."""
         p = _entry_plan(plan_cache, name)
@@ -507,12 +492,10 @@ class TestPlanProperties:
             # boundary round trip outweighs the HOF) and keeps the HOF.
             "embed_semdedup_verdicts",
         }
-    # r7 process fix: audit staged entries pre-flip too (the r6 red
-    # test came from this sweep missing the staged set).
 
     @pytest.mark.parametrize("name", _AUDITED_NAMES)
     def test_no_python_row_udfs(self, spark, plan_cache, name):
-        """Per-entry sweep over live + staged (see ALLOWED_PANDAS
+        """Per-entry sweep over the catalog (see ALLOWED_PANDAS
         above); shares the session plan cache with the cartesian
         sweep. r12: the sweep now also catches MapInArrow and
         FlatMapGroupsInPandas (applyInPandas) nodes — previously only
@@ -1133,9 +1116,9 @@ class TestConnectedComponents:
     def test_path_graph_converges_with_bounded_plan(self, spark):
         """A 12-node path is the adversarial case: diameter 11 forces 11
         propagation rounds. Correctness: every node must land in
-        component 0. Scale: localCheckpoint every 3 rounds must keep the
-        final plan's join count bounded by the checkpoint interval, not
-        the round count (uncheckpointed, 11 rounds chain ~22 joins)."""
+        component 0. Scale: the per-round checkpoint must keep the final
+        plan's join count bounded by one round's joins, not the round
+        count (uncheckpointed, 11 rounds chain ~22 joins)."""
         from virapipe_spark.graph import connected_components
 
         n = 12
@@ -1143,13 +1126,11 @@ class TestConnectedComponents:
             [(i, i + 1) for i in range(n - 1)], ["a", "b"]
         )
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-        labels = connected_components(
-            edges, nodes, node_col="doc_id", checkpoint_every=3
-        )
+        labels = connected_components(edges, nodes, node_col="doc_id")
         rows = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
         assert rows == {i: 0 for i in range(n)}
         o = _optimized(labels)
-        # ≤ checkpoint_every rounds of lineage × 2 joins/round, + slack
+        # lineage is truncated every round: one round's joins, + slack
         assert o.count("Join") <= 8, f"lineage not truncated:\n{o}"
 
     def test_isolated_nodes_self_label(self, spark):
@@ -1186,7 +1167,7 @@ class TestConnectedComponents:
         edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["a", "b"])
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))
         labels = connected_components_doubling(
-            edges, nodes, node_col="doc_id", max_rounds=10, checkpoint_every=3
+            edges, nodes, node_col="doc_id", max_rounds=10
         )
         rows = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
         assert rows == {i: 0 for i in range(n)}
@@ -1347,8 +1328,7 @@ class TestConnectedComponentsProperty:
             got = {
                 r["doc_id"]: r["cluster_id"]
                 for r in connected_components(
-                    edf, nodes, node_col="doc_id", max_rounds=40,
-                    checkpoint_every=4,
+                    edf, nodes, node_col="doc_id", max_rounds=40
                 ).collect()
             }
             assert got == expected
@@ -1602,9 +1582,8 @@ class TestCompressionRatio:
     ):
         import zlib
 
-        from virapipe_spark.queries.staged import STAGED_R7
-
-        fn = STAGED_R7["docs_compression_ratio"][0]
+        catalog.load_all()
+        fn = catalog.QUERIES["docs_compression_ratio"]
         rows = fn(spark, SF_DIR).collect()
         assert rows and all(r["bounds_ok"] for r in rows)
         corpus_min = min(r["ratio_bp"] for r in rows)

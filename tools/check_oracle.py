@@ -5,8 +5,7 @@ parquet tables, then compares row count, sorted column names, and an
 order-insensitive value hash (values normalized: doubles rounded to 9
 significant digits, timestamps to ISO strings, NaN/None unified).
 
-Usage: python tools/check_oracle.py [--bare] [--strict] [--staged]
-       [sf_dir] [name ...]
+Usage: python tools/check_oracle.py [--bare] [--strict] [sf_dir] [name ...]
 
 ``--bare`` builds a plain ``SparkSession.builder`` with none of
 session.py's DEFAULT_CONF — the same environment the driver runs queries
@@ -18,10 +17,6 @@ session.py and five events queries crashed under the driver).
 on top of the normalized hash, so int-vs-float / HUGEINT / DECIMAL
 divergences that the driver's exact hash would catch fail locally too
 (round-5 lesson: sessionize_events).
-
-``--staged`` force-promotes every pending staged generation
-into the checked set, so window-overflow entries get the same gate as
-live ones BEFORE their flip round.
 
 Set ``CHECK_ORACLE_TIMES_JSON=<path>`` to also write one JSON object of
 per-entry wall seconds ({name: sec, ...}, insertion = execution order)
@@ -49,28 +44,12 @@ TABLES = catalog.TABLES
 
 
 def main() -> int:
-    argv = [
-        a for a in sys.argv[1:] if a not in ("--bare", "--strict", "--staged")
-    ]
+    argv = [a for a in sys.argv[1:] if a not in ("--bare", "--strict")]
     bare = "--bare" in sys.argv[1:]
     strict = "--strict" in sys.argv[1:]
-    with_staged = "--staged" in sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     catalog.load_all()
-    if with_staged:
-        from virapipe_spark.queries import staged as staged_mod
-
-        if not staged_mod.R7_PROMOTED:
-            staged_mod.promote_r7()
-        if not staged_mod.R8_PROMOTED:
-            staged_mod.promote_r8()
-        if not staged_mod.R9_PROMOTED:
-            staged_mod.promote_r9()
-        if not staged_mod.R10_PROMOTED:
-            staged_mod.promote_r10()
-        if not staged_mod.R11_PROMOTED:
-            staged_mod.promote_r11()
 
     def build_session():
         if bare:

@@ -1,8 +1,8 @@
-"""Print the formatted physical plan of catalog (or staged) entries —
+"""Print the formatted physical plan of catalog entries —
 the dev loop for the SCALE.md plan audits: check pushdown, exchanges,
 codegen spans, and join strategies without writing a script.
 
-Usage: python tools/explain.py [--staged] [sf_dir] name [name ...]
+Usage: python tools/explain.py [sf_dir] name [name ...]
 """
 
 from __future__ import annotations
@@ -17,15 +17,8 @@ from virapipe_spark.session import session
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--staged"]
-    if "--staged" in sys.argv[1:]:
-        catalog.load_all()
-        from virapipe_spark.queries import staged as staged_mod
-
-        if not staged_mod.R7_PROMOTED:
-            staged_mod.promote_r7()
-    else:
-        catalog.load_all()
+    argv = sys.argv[1:]
+    catalog.load_all()
     sf_dir = "/root/testdata/sf0.01"
     if argv and os.path.isdir(argv[0]):
         sf_dir = argv.pop(0)

@@ -26,6 +26,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: name -> the ``since`` round it was registered with (see :func:`query`).
+_SINCE: dict[str, int] = {}
 
 #: Parquet tables the driver provides at each scale factor.
 TABLES = (
@@ -179,14 +181,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str, oracle: str | None = None, since: int = 0
+) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; ``oracle`` is the DuckDB-equivalent
-    SQL (omit for non-SQL-expressible ops -> rows-only check)."""
+    SQL (omit for non-SQL-expressible ops -> rows-only check).
+
+    ``since`` is the round the entry went live (0 for the original
+    catalog). :func:`load_all` groups the registry by it, so entries that
+    went live later sort after every earlier one; registration order
+    breaks ties inside a group."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
+        _SINCE[name] = since
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -194,83 +204,36 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+def _sort_by_since(registry: dict) -> None:
+    """Stable-sort ``registry`` in place by each entry's ``since``."""
+    order = sorted(registry, key=_SINCE.__getitem__)
+    # rebuild only when out of order: repeated loads leave the dict alone
+    if order != list(registry):
+        items = [(n, registry[n]) for n in order]
+        registry.clear()
+        registry.update(items)
+
+
 def load_all() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module that registers queries (idempotent), then
+    order the registry by ``since``.
+
+    ``annotation`` registers first (the ``queries`` package imports it)
+    so its entries lead each ``since`` group; :func:`ordered_queries`
+    breaks ties by this order."""
     from virapipe_spark.queries import (  # noqa: F401
+        annotation,
         relational,
         genomics,
         dataflow,
         extensions,
         streaming,
         multimodal,
-        staged,
         tpch,
     )
 
-    # Round-5 flip: the 9 pre-verified round-4 entries go live (they were
-    # staged because round 4's 50-entry correctness window was full).
-    if not staged.PROMOTED:
-        staged.promote()
-    # Round-7 flip, SELF-ARMING: the round-6 window overflow
-    # (staged.STAGED_R7) goes live as soon as the round-6 driver
-    # artifacts exist — i.e. from round 7 onward — with no hand edit.
-    # During round 6 itself the entries stay staged so the 50-entry
-    # window is exactly consumed by the live never-proven set.
-    if not staged.R7_PROMOTED:
-        import glob
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if glob.glob(os.path.join(root, "CORRECTNESS_r0[6-9].json")) or glob.glob(
-            os.path.join(root, "CORRECTNESS_r[1-9][0-9].json")
-        ):
-            staged.promote_r7()
-    # Round-8 flip, SELF-ARMING on the round-7 artifacts (same pattern).
-    if not staged.R8_PROMOTED:
-        import glob
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if glob.glob(os.path.join(root, "CORRECTNESS_r0[7-9].json")) or glob.glob(
-            os.path.join(root, "CORRECTNESS_r[1-9][0-9].json")
-        ):
-            staged.promote_r8()
-    # Round-9 flip, SELF-ARMING on the round-8 artifacts (same pattern;
-    # the second round-7 overflow generation — round 7 authored more
-    # than one window of new entries).
-    if not staged.R9_PROMOTED:
-        import glob
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if glob.glob(os.path.join(root, "CORRECTNESS_r0[8-9].json")) or glob.glob(
-            os.path.join(root, "CORRECTNESS_r[1-9][0-9].json")
-        ):
-            staged.promote_r9()
-    # Round-10 flip, SELF-ARMING on the round-9 artifacts (same
-    # pattern; the third round-7 overflow generation).
-    if not staged.R10_PROMOTED:
-        import glob
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if glob.glob(os.path.join(root, "CORRECTNESS_r09.json")) or glob.glob(
-            os.path.join(root, "CORRECTNESS_r[1-9][0-9].json")
-        ):
-            staged.promote_r10()
-    # Round-11 flip, SELF-ARMING on the round-10 artifacts (same
-    # pattern; the post-freeze authoring generation — its arming
-    # artifact exists from the moment the entries are authored, so
-    # they flip live immediately and prove in the round-11 window).
-    if not staged.R11_PROMOTED:
-        import glob
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if glob.glob(os.path.join(root, "CORRECTNESS_r1[0-9].json")) or glob.glob(
-            os.path.join(root, "CORRECTNESS_r[2-9][0-9].json")
-        ):
-            staged.promote_r11()
+    _sort_by_since(QUERIES)
+    _sort_by_since(ORACLES)
 
 
 def _verified_rounds(root: str | None = None) -> dict[str, int]:
@@ -331,28 +294,16 @@ def _verified_rounds(root: str | None = None) -> dict[str, int]:
     }
 
 
-#: Entries whose latest driver proof predates a change known to have
-#: invalidated their input path, so the proof is stale even though the
-#: most recent check passed: the r04 TIMESTAMP_NTZ testdata drift broke
-#: every `F.unix_micros(ts)` consumer, but these two were last checked
-#: in r03 (against the OLD nanos encoding) and never re-checked in r04
-#: — their r03 green says nothing about the current data. Treated as
-#: unproven by :func:`ordered_queries` until a post-drift (round > 4)
-#: driver row exists — self-healing, no manual cleanup needed.
-STALE_SUSPECT = frozenset({"window_lag_gap", "window_time_range_avg"})
-_DRIFT_ROUND = 4
-
-#: The STALE_SUSPECT principle applied to CODE drift instead of data
-#: drift: entries whose implementation was REWRITTEN after their latest
+#: Entries whose implementation was REWRITTEN after their latest
 #: driver proof (name -> rewrite round). A green driver row proves the
 #: plan that ran that round; a proof older than the rewrite says nothing
 #: about the current code, so :func:`_ranked` demotes such an entry to
-#: rank 0.5 — after the never-proven block (which must fully own each
-#: flip round's 50-slot window) but before every stale-but-valid proof,
+#: rank 0.5 — after the never-proven block (which has first claim on
+#: the 50-slot window) but before every stale-but-valid proof,
 #: so it re-enters the window the first round with spare slots. Self-
 #: healing: once a driver row at-or-after the rewrite round exists the
 #: entry ranks by that round again; no manual cleanup. The local pooled
-#: compare (tests/test_staged.py) re-arms off this same table.
+#: compare (tests/test_oracle_reproof.py) re-arms off this same table.
 REWRITTEN_IN: dict[str, int] = {
     # (The r8-r11 rows were pruned once every proof round reached its
     # rewrite round — the map only needs rows whose re-proof is still
@@ -417,16 +368,13 @@ def _ranked(
 ) -> list[str]:
     """The window ordering, as a pure function: ``names`` in
     registration order, ``proven`` from :func:`_verified_rounds`.
-    Factored out of :func:`ordered_queries` so the rounds-8..11
-    flip/window simulation (tests/test_catalog.py) exercises the REAL
-    sort against synthetic artifact histories."""
+    Factored out of :func:`ordered_queries` so tests/test_catalog.py
+    exercises the real sort against synthetic proof histories."""
     if rewritten is None:
         rewritten = REWRITTEN_IN
 
     def rank(n: str) -> float:
         r = proven.get(n, 0)
-        if n in STALE_SUSPECT and r <= _DRIFT_ROUND:
-            return 0.0
         if 0 < r < rewritten.get(n, 0):
             return 0.5  # proof predates the rewrite: re-prove next
         return float(r)

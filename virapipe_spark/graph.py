@@ -49,7 +49,6 @@ def connected_components(
     node_col: str = "doc_id",
     label_col: str = "cluster_id",
     max_rounds: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Label every node with the minimum node id reachable from it.
 
@@ -65,10 +64,7 @@ def connected_components(
     detect it. ``max_rounds`` is a safety cap against adversarial
     graphs, not a tuning knob — dedup-shaped graphs converge in 3-5.
 
-    ``checkpoint_every`` is DEPRECATED and ignored (r12): lineage is
-    truncated EVERY round — see the in-loop comment. Kept only for
-    call-site compatibility, matching the doubling variant's
-    convention.
+    Lineage is truncated every round — see the in-loop comment.
     """
     sym = edges.select("a", "b").union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -107,8 +103,7 @@ def connected_components(
         # checkpoint in the same job (the CC-doubling fuse,
         # tools/ab_cc_lazyckpt.py) — per-round flat plans at the same
         # one-job-per-round cost, the cadence the doubling variant
-        # adopted in r10. checkpoint_every is retained for call-site
-        # compatibility but no longer used.
+        # adopted in r10.
         new_labels = truncate_lineage(
             new_labels, eager=False, reliable=True
         )
@@ -140,7 +135,6 @@ def connected_components_doubling(
     node_col: str = "doc_id",
     label_col: str = "cluster_id",
     max_rounds: int = 50,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Connected components in O(log diameter) rounds: min-label
     propagation with POINTER DOUBLING — the high-diameter companion to
@@ -164,12 +158,10 @@ def connected_components_doubling(
     nodes label themselves, raises rather than returning unconverged
     labels.
 
-    ``checkpoint_every`` is DEPRECATED and ignored (as in
-    :func:`bfs_hops`): since the r10 per-round-eager rewrite the loop
-    truncates lineage every round by construction — the convergence
-    filter materializes each round anyway, and a flat plan per round
-    measurably beats any sparser cadence (see the inline A/B below).
-    The parameter is retained so existing call sites keep working.
+    Since the r10 per-round-eager rewrite the loop truncates lineage
+    every round by construction — the convergence filter materializes
+    each round anyway, and a flat plan per round measurably beats any
+    sparser cadence (see the inline A/B below).
     """
     sym = edges.select("a", "b").union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -214,8 +206,7 @@ def connected_components_doubling(
         # materialize the round anyway, and a flat plan each round beats
         # the old persist-twice-checkpoint-every-third cadence measurably
         # (interleaved A/B on a chain-heavy 15-round graph: 13.2s -> 7.6s
-        # warm); checkpoint_every is kept in the signature for callers
-        # but truncation now happens every round by construction.
+        # warm).
         # r12: LAZY — the count() is a FULL action, so it materializes
         # the checkpoint in the same job instead of paying a dedicated
         # eager-materialization job per round (interleaved A/B x7 on the
@@ -317,7 +308,6 @@ def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Multi-source BFS shortest hop-distance over a directed edge list
     ``(src, dst)`` — the fourth member of the iterative-algorithm
@@ -341,13 +331,11 @@ def bfs_hops(
     round for nothing), with each frontier EAGERLY checkpointed and an
     empty-frontier early exit, so a 24-hop cap on a diameter-20 graph
     runs 21 flat-plan rounds at frontier-sized shuffles instead of 24
-    compounding ones. ``checkpoint_every`` is retained for API
-    compatibility; the deep shape truncates every round by
+    compounding ones. The deep shape truncates every round by
     construction (same reliable-checkpoint caveat on preemptible
     clusters as :func:`connected_components`). Unreached nodes are
     absent from the output (standard sparse-BFS contract), so result
     size is bounded by the reachable set."""
-    del checkpoint_every  # truncation cadence is shape-dependent, below
     dist0 = sources.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("int").alias("dist"),

@@ -1,8 +1,8 @@
 """Spark-vs-DuckDB result comparison — the driver's correctness
 contract, factored out so both the CLI gate (tools/check_oracle.py) and
-the staged-entry tests (tests/test_staged.py) apply the identical
-normalization: columns sorted by name, rows sorted by their normalized
-string form, doubles to 9 significant digits, NaN/None unified,
+the local oracle re-proof (tests/test_oracle_reproof.py) apply the
+identical normalization: columns sorted by name, rows sorted by their
+normalized string form, doubles to 9 significant digits, NaN/None unified,
 timestamps to ISO strings.
 """
 

@@ -1,59 +1,20 @@
-"""Catalog entries authored in round 4 behind a staging gate, LIVE
-since round 5 (``catalog.load_all`` calls :func:`promote`).
+"""Annotation-format and interval-algebra catalog entries.
 
-Why they were staged: the driver hash-checks only the first 50 entries
-of ``queries()``, and round 4's window was exactly full with
-never-proven and least-recently-proven entries — registering these then
-would have displaced a query that needed its correctness row.
-``tests/test_staged.py`` ran (and still runs) the driver's exact
-compare (virapipe_spark.oracle_compare) against DuckDB on every entry,
-so the flip shipped with pre-verified correctness, and
-``catalog.ordered_queries()`` put the 9 never-proven names at the front
-of the round-5 window.
+Entries cover VCF/GFF reader round-trips, the interval algebra
+(overlap join, merge, bin coverage, subtraction, depth histogram,
+reciprocal overlap, closest feature, Jaccard), the read-QC scalars
+(sliding-window trim, DUST), GC content, and assembly N50.
 
-Entries cover the round-4 library additions: VCF/GFF reader
-round-trips, the interval algebra (overlap join / merge / coverage),
-the read-QC scalars (sliding-window trim, DUST), GC content, and
-assembly N50.
+``catalog.load_all`` imports this module before every other query
+module, so its entries lead each ``since`` group of the registry.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from virapipe_spark import catalog
-from virapipe_spark.catalog import table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-#: name -> (query fn, DuckDB oracle SQL)
-STAGED: dict[str, tuple[QueryFn, str]] = {}
-
-#: Set once promote() has run, so catalog.load_all can flip exactly once
-#: even when called repeatedly (tests, bench, driver all call it).
-PROMOTED = False
-
-
-def staged(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED or name in catalog.QUERIES:
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote() -> None:
-    """Register every staged entry into the live catalog (round-5
-    flip; called from catalog.load_all)."""
-    global PROMOTED
-    for name, (fn, oracle) in STAGED.items():
-        catalog.query(name, oracle)(fn)
-    PROMOTED = True
+from virapipe_spark.catalog import query, table
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +22,7 @@ def promote() -> None:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "vcf_scan_roundtrip",
     oracle="""
     SELECT concat('chr', doc_id % 3) AS chrom,
@@ -74,6 +35,7 @@ def promote() -> None:
            CAST(2 AS INTEGER) AS n_samples
     FROM documents WHERE doc_id < 300
     """,
+    since=5,
 )
 def vcf_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked VCF writer→reader round-trip: variant lines are
@@ -116,7 +78,7 @@ def vcf_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "gff_scan_roundtrip",
     oracle="""
     SELECT concat('chr', doc_id % 3) AS seqid,
@@ -128,6 +90,7 @@ def vcf_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            concat('g', doc_id) AS feature_id
     FROM documents WHERE doc_id < 300
     """,
+    since=5,
 )
 def gff_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked GFF3 writer→reader round-trip through io.read_gff
@@ -204,7 +167,7 @@ def _reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "interval_overlap_join",
     oracle=f"""
     WITH genes AS ({_GENES_SQL}), reads AS ({_READS_SQL})
@@ -214,6 +177,7 @@ def _reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM genes g JOIN reads r
       ON g.seqid = r.seqid AND g.start <= r."end" AND r.start <= g."end"
     """,
+    since=5,
 )
 def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intervals.overlap_join under the correctness gate: the
@@ -231,7 +195,7 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "interval_merge_spans",
     oracle=f"""
     WITH iv AS ({_GENES_SQL}),
@@ -259,6 +223,7 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_merged
     FROM islands GROUP BY seqid, island
     """,
+    since=5,
 )
 def interval_merge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intervals.merge_overlapping under the gate — gaps-and-islands
@@ -278,7 +243,7 @@ def interval_merge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_overlapping(_genes(spark, sf_dir).drop("id"))
 
 
-@staged(
+@query(
     "interval_bin_coverage",
     oracle=f"""
     WITH iv AS ({_READS_SQL}),
@@ -293,6 +258,7 @@ def interval_merge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_intervals
     FROM binned GROUP BY seqid, bin
     """,
+    since=5,
 )
 def interval_bin_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intervals.coverage under the gate — per-bin interval counts."""
@@ -306,7 +272,7 @@ def interval_bin_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "docs_trim_quality",
     oracle="""
     WITH b AS (
@@ -330,6 +296,7 @@ def interval_bin_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ELSE fail_pos - 1 END AS INTEGER) AS trim_at
     FROM w
     """,
+    since=5,
 )
 def docs_trim_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """functions.trim_point_sliding under the gate: documents.text as
@@ -345,7 +312,7 @@ def docs_trim_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "docs_dust_complexity",
     oracle=f"""
     WITH s AS (
@@ -372,6 +339,7 @@ def docs_trim_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(pairs2 AS DOUBLE) / (n * (n - 1)), 6) AS dust
     FROM sc
     """,
+    since=5,
 )
 def docs_dust_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """functions.dust_score under the gate, over md5-derived DNA (the
@@ -386,7 +354,7 @@ def docs_dust_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "docs_gc_content",
     oracle=f"""
     SELECT doc_id,
@@ -397,6 +365,7 @@ def docs_dust_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                            '{"ACGTACGTACGTACGT"}') AS dna
           FROM documents)
     """,
+    since=5,
 )
 def docs_gc_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """metrics.gc_content under the gate (translate-delete fraction)."""
@@ -407,7 +376,7 @@ def docs_gc_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.round(gc_content(dna), 4).alias("gc"))
 
 
-@staged(
+@query(
     "assembly_n50_stats",
     oracle="""
     WITH l AS (SELECT CAST(n_chars AS BIGINT) AS len FROM documents),
@@ -429,6 +398,7 @@ def docs_gc_content(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n50
     FROM t
     """,
+    since=5,
 )
 def assembly_n50_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """metrics.assembly_stats under the gate — documents.n_chars as the
@@ -441,41 +411,8 @@ def assembly_n50_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-6 overflow, staged for the round-7 window
+# Interval subtraction (bedtools subtract)
 # ---------------------------------------------------------------------------
-
-#: Round 6 registered 51 never-driver-proven entries against the
-#: driver's 50-entry correctness window (plus the demoted
-#: sessionize_events re-check) — one generation of staging absorbs the
-#: overflow, exactly like round 4 -> 5. Both entries here are
-#: strict-verified locally at sf0.01 AND sf0.1 (tests/test_staged.py
-#: re-proves the oracle-backed one each run); only driver confirmation
-#: is deferred. Round 7: flip by calling promote_r7() from
-#: catalog.load_all next to the round-5 promote() call.
-STAGED_R7: dict[str, tuple[QueryFn, str | None]] = {}
-
-R7_PROMOTED = False
-
-
-def staged_r7(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED_R7 or name in catalog.QUERIES:
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED_R7[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote_r7() -> None:
-    """Register the round-6 overflow into the live catalog (call from
-    catalog.load_all in round 7)."""
-    global R7_PROMOTED
-    if R7_PROMOTED:
-        return
-    for name, (fn, oracle) in STAGED_R7.items():
-        catalog.query(name, oracle)(fn)
-    R7_PROMOTED = True
 
 
 _SUB_READS_SQL = """
@@ -505,7 +442,7 @@ def _sub_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "interval_subtract",
     oracle=f"""
     WITH genes AS ({_GENES_SQL}), reads AS ({_SUB_READS_SQL}),
@@ -564,6 +501,7 @@ def _sub_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT * FROM untouched
     )
     """,
+    since=7,
 )
 def interval_subtract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`intervals.subtract` (bedtools subtract) under the correctness
@@ -588,195 +526,11 @@ def interval_subtract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-7 overflow, staged for the round-8 window
+# Interval depth, reciprocal overlap and closest feature
 # ---------------------------------------------------------------------------
 
-#: Same mechanism as STAGED_R7, one generation on: entries authored in
-#: round 7 beyond the 50-slot driver window go here and flip live once
-#: the round-7 driver artifacts exist (self-arming in catalog.load_all).
-#: Pre-flip gate (ALL FOUR sweeps, closing the r6 process hole where the
-#: pandas-UDF sweep missed staged entries): the cartesian/BNLJ audit,
-#: the lossy-oracle-type sweep, the pandas-UDF plan sweep, and two-scale
-#: strict verification — each iterates pending_staged() so staged
-#: entries are audited in their promoted form BEFORE the flip.
-STAGED_R8: dict[str, tuple[QueryFn, str | None]] = {}
 
-R8_PROMOTED = False
-
-
-def staged_r8(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED_R8 or name in STAGED_R7 or name in catalog.QUERIES:
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED_R8[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote_r8() -> None:
-    """Register the round-7 overflow into the live catalog (armed by
-    catalog.load_all once CORRECTNESS_r07+ exists)."""
-    global R8_PROMOTED
-    if R8_PROMOTED:
-        return
-    for name, (fn, oracle) in STAGED_R8.items():
-        catalog.query(name, oracle)(fn)
-    R8_PROMOTED = True
-
-
-def pending_staged() -> dict[str, QueryFn]:
-    """Every staged entry not yet live in catalog.QUERIES, across all
-    staging generations. Plan-audit sweeps (tests/test_scale_plans.py)
-    iterate catalog.QUERIES ∪ pending_staged() so a staged entry is
-    audited in exactly the form it will have post-flip — the r6 lesson:
-    the pandas-UDF sweep skipped staged entries and went red the moment
-    the self-arming promotion fired."""
-    out: dict[str, QueryFn] = {}
-    for gen in (STAGED_R7, STAGED_R8, STAGED_R9, STAGED_R10, STAGED_R11):
-        for n, (fn, _o) in gen.items():
-            if n not in catalog.QUERIES:
-                out[n] = fn
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Round-11 authoring (the deliberate post-freeze unfreeze)
-# ---------------------------------------------------------------------------
-#
-# STAGING RETIRED FOR NEW GENERATIONS (round 12, per r11 ADVICE): once
-# arming artifacts pre-exist at authoring time, the staged-generation
-# freeze is a pass-through — promote fires at import and pending_staged()
-# never sees the entries. Rather than let the machinery degenerate
-# silently, new entries now register LIVE directly (@catalog.query in
-# their topic modules); ordered_queries() ranks never-proven names first,
-# which is the same in-round proving the staged_r11 pattern achieved.
-# The historical generations above/below stay as-is (their flip history
-# is load_all's logic and the window-simulation tests exercise it).
-
-#: Sixth staging generation — the r10 verdict's deliberate unfreeze:
-#: every 356 prior entries are driver-proven, the window recycles ~50
-#: slots/round, so new r11 entries flip live immediately (their arming
-#: artifact CORRECTNESS_r10 already exists when they are authored) and
-#: are proven in the round-11 window. Same discipline as every prior
-#: generation: oracle-backed, pooled pre-proof compare in
-#: tests/test_staged.py, all four plan sweeps via pending_staged().
-STAGED_R11: dict[str, tuple[QueryFn, str | None]] = {}
-
-R11_PROMOTED = False
-
-
-def staged_r11(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if (
-            name in STAGED_R11
-            or name in STAGED_R10
-            or name in STAGED_R9
-            or name in STAGED_R8
-            or name in STAGED_R7
-            or name in catalog.QUERIES
-        ):
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED_R11[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote_r11() -> None:
-    """Register the round-11 authoring into the live catalog (armed by
-    catalog.load_all once CORRECTNESS_r10+ exists — i.e. immediately)."""
-    global R11_PROMOTED
-    if R11_PROMOTED:
-        return
-    for name, (fn, oracle) in STAGED_R11.items():
-        catalog.query(name, oracle)(fn)
-    R11_PROMOTED = True
-
-
-# ---------------------------------------------------------------------------
-# Round-7 third overflow, staged for the round-10 window
-# ---------------------------------------------------------------------------
-
-#: Fourth staging generation: the round-9 window is exactly full at 50
-#: (STAGED_R9), so further round-7 authoring waits two rounds and flips
-#: on the round-9 driver artifacts. Identical mechanism, same four
-#: pre-flip sweeps (all iterate pending_staged).
-STAGED_R10: dict[str, tuple[QueryFn, str | None]] = {}
-
-R10_PROMOTED = False
-
-
-def staged_r10(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if (
-            name in STAGED_R10
-            or name in STAGED_R9
-            or name in STAGED_R8
-            or name in STAGED_R7
-            or name in catalog.QUERIES
-        ):
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED_R10[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote_r10() -> None:
-    """Register the third round-7 overflow into the live catalog
-    (armed by catalog.load_all once CORRECTNESS_r09+ exists)."""
-    global R10_PROMOTED
-    if R10_PROMOTED:
-        return
-    for name, (fn, oracle) in STAGED_R10.items():
-        catalog.query(name, oracle)(fn)
-    R10_PROMOTED = True
-
-
-
-# ---------------------------------------------------------------------------
-# Round-7 second overflow, staged for the round-9 window
-# ---------------------------------------------------------------------------
-
-#: Third staging generation: round 7 authored more than one window's
-#: worth of overflow (STAGED_R8 holds exactly the 50 entries the
-#: round-8 window can prove), so the remainder waits one more round and
-#: flips on the round-8 driver artifacts. Identical mechanism and the
-#: same four pre-flip sweeps (all iterate pending_staged, which spans
-#: every generation).
-STAGED_R9: dict[str, tuple[QueryFn, str | None]] = {}
-
-R9_PROMOTED = False
-
-
-def staged_r9(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if (
-            name in STAGED_R9
-            or name in STAGED_R8
-            or name in STAGED_R7
-            or name in catalog.QUERIES
-        ):
-            raise ValueError(f"duplicate staged query name: {name}")
-        STAGED_R9[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def promote_r9() -> None:
-    """Register the second round-7 overflow into the live catalog
-    (armed by catalog.load_all once CORRECTNESS_r08+ exists)."""
-    global R9_PROMOTED
-    if R9_PROMOTED:
-        return
-    for name, (fn, oracle) in STAGED_R9.items():
-        catalog.query(name, oracle)(fn)
-    R9_PROMOTED = True
-
-
-@staged_r8(
+@query(
     "interval_depth_histogram",
     oracle=f"""
     WITH iv AS ({_READS_SQL}),
@@ -802,6 +556,7 @@ def promote_r9() -> None:
     FROM seg WHERE depth > 0 AND seg_len IS NOT NULL
     GROUP BY seqid, depth
     """,
+    since=8,
 )
 def interval_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intervals.depth_histogram under the gate — the exact
@@ -820,7 +575,7 @@ def interval_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return depth_histogram(_reads(spark, sf_dir))
 
 
-@staged_r9(
+@query(
     "interval_reciprocal_overlap",
     oracle=f"""
     WITH genes AS (
@@ -846,6 +601,7 @@ def interval_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs
     WHERE ov_len * 2 >= len_a AND ov_len * 2 >= len_b
     """,
+    since=9,
 )
 def interval_reciprocal_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECIPROCAL-overlap self-join (`bedtools intersect -f 0.5 -r`)
@@ -910,7 +666,7 @@ def interval_reciprocal_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-@staged_r9(
+@query(
     "interval_closest_feature",
     oracle=f"""
     WITH genes AS ({_GENES_SQL}), reads AS ({_READS_SQL}),
@@ -936,6 +692,7 @@ def interval_reciprocal_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'none' END AS side
     FROM a
     """,
+    since=9,
 )
 def interval_closest_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLOSEST-feature assignment (`bedtools closest`) — for every
@@ -1108,7 +865,7 @@ def _merged_sql(src: str, alias: str) -> str:
     )"""
 
 
-@staged_r10(
+@query(
     "interval_jaccard",
     oracle=f"""
     WITH ga AS ({_GENES_SQL}),
@@ -1144,6 +901,7 @@ def _merged_sql(src: str, alias: str) -> str:
     JOIN lensb lb ON lb.seqid = l.seqid
     LEFT JOIN inter i ON i.seqid = l.seqid
     """,
+    since=10,
 )
 def interval_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERVAL-SET JACCARD — bedtools ``jaccard`` (Favorov et al.

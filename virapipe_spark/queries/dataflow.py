@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from virapipe_spark.catalog import query, table
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 
 
 @query(
@@ -300,13 +299,14 @@ def jsonl_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(schema).json(out)
 
 
-@staged_r7(
+@query(
     "orc_scan_roundtrip",
     oracle="""
     SELECT p_partkey, p_name, p_brand, CAST(p_size AS INTEGER) AS p_size,
            p_retailprice
     FROM part WHERE p_partkey < 400
     """,
+    since=7,
 )
 def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked ORC writer→reader round-trip — Spark's second
@@ -395,7 +395,7 @@ def events_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8("files_compaction")  # rows-only: file counts are codec/env grain
+@query("files_compaction", since=8)  # rows-only: file counts are codec/env grain
 def files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction round-trip (io.compact_parquet) — the
     table-maintenance op every streaming sink and incremental ingest

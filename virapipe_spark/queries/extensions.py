@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from virapipe_spark.catalog import query, table
 from virapipe_spark.scale import spread_scan, truncate_lineage, two_phase_rank
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 
 # ---------------------------------------------------------------------------
 # Shared shingle machinery (word 3-grams)
@@ -3431,10 +3430,7 @@ def docs_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from virapipe_spark.queries.staged import staged_r7
-
-
-@staged_r7("docs_compression_ratio")  # rows-only: no zlib in DuckDB SQL
+@query("docs_compression_ratio", since=7)  # rows-only: no zlib in DuckDB SQL
 def docs_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression ratio per document — the classic
     repetitiveness/quality signal (highly compressible text is
@@ -3479,7 +3475,7 @@ def docs_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "docs_setsim_prefix",
     oracle=_SHINGLES_SQL
     + """
@@ -3497,6 +3493,7 @@ def docs_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON doc_b = sb.doc_id
     WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.5
     """,
+    since=7,
 )
 def docs_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AllPairs/PPJoin-style set-similarity join with PREFIX FILTERING
@@ -3750,7 +3747,7 @@ def _power_direction(
 
 
 
-@staged_r7(
+@query(
     "embed_power_iteration",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -3781,6 +3778,7 @@ def _power_direction(
     SELECT a.d, a.v AS v1, b.v AS v2, (SELECT align FROM witness) AS align
     FROM v1 a JOIN v2 b USING (d)
     """,
+    since=7,
 )
 def embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POWER ITERATION on the integer Gram matrix — the spectral
@@ -3891,7 +3889,7 @@ def _bm25_score_sql(n: str, avgdl: str) -> str:
     return f"(({terms[0]} + {terms[1]}) + {terms[2]})"
 
 
-@staged_r7(
+@query(
     "docs_bm25_rank",
     oracle=f"""
     WITH toks AS (
@@ -3945,6 +3943,7 @@ def _bm25_score_sql(n: str, avgdl: str) -> str:
     FROM scored
     ORDER BY rnk LIMIT 20
     """,
+    since=7,
 )
 def docs_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25-family retrieval ranking for a fixed 3-term query (the 3
@@ -4060,7 +4059,7 @@ _ABTT_RATIO = (
 )
 
 
-@staged_r7(
+@query(
     "embed_abtt_residual",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -4093,6 +4092,7 @@ _ABTT_RATIO = (
            {_ABTT_RATIO} AS res_ratio
     FROM per, n2t
     """,
+    since=7,
 )
 def embed_abtt_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-but-the-top residual profile (Mu & Viswanath, ICLR'18 —
@@ -4158,7 +4158,7 @@ _CHUNK = 40  # tokens per chunk
 _STRIDE = 30  # tokens between chunk starts (25% overlap)
 
 
-@staged_r7(
+@query(
     "docs_chunk_windows",
     oracle=f"""
     WITH toks AS (
@@ -4181,6 +4181,7 @@ _STRIDE = 30  # tokens between chunk starts (25% overlap)
            md5(array_to_string(c, ' ')) AS chunk_hash
     FROM chunks
     """,
+    since=7,
 )
 def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size overlapping token chunking — the context-window prep
@@ -4236,7 +4237,7 @@ _ABTT_COS = (
 )
 
 
-@staged_r7(
+@query(
     "embed_knn_abtt",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -4287,6 +4288,7 @@ _ABTT_COS = (
     SELECT query_id, neighbor_id, cosine_resid, rn
     FROM ranked WHERE rn <= {_TOP_K}
     """,
+    since=7,
 )
 def embed_knn_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k under ABTT-corrected cosine — similarity search
@@ -4369,7 +4371,7 @@ def embed_knn_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "embed_cluster_purity",
     oracle=_KM_ORACLE_HEAD
     + ","
@@ -4411,6 +4413,7 @@ def embed_knn_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(g.agree AS DOUBLE) / g.total, 6) AS purity
     FROM top t, tot g
     """,
+    since=7,
 )
 def embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clustering evaluation — PURITY of the integer-exact Lloyd
@@ -4461,7 +4464,7 @@ def embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "docs_minhash_recall",
     oracle=_SHINGLES_SQL
     + f"""
@@ -4511,6 +4514,7 @@ def embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE round(CAST(n_hit AS DOUBLE) / n_lsh, 6) END AS precision
     FROM counts
     """,
+    since=7,
 )
 def docs_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEASURED MinHash-LSH quality — recall AND precision of the
@@ -4557,7 +4561,7 @@ def docs_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "docs_length_outliers_mad",
     oracle="""
     WITH lens AS (SELECT doc_id, n_chars FROM documents),
@@ -4585,6 +4589,7 @@ def docs_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM devs d, mad m
     WHERE d.dev > 2 * m.mad
     """,
+    since=7,
 )
 def docs_length_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection by MEDIAN ABSOLUTE DEVIATION — the
@@ -4648,7 +4653,7 @@ _HHI_EXPR = (
 )
 
 
-@staged_r7(
+@query(
     "supplier_concentration_hhi",
     oracle=f"""
     WITH rev AS (
@@ -4667,6 +4672,7 @@ _HHI_EXPR = (
            round(10000.0 / n_suppliers, 4) AS hhi_uniform
     FROM tot
     """,
+    since=7,
 )
 def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-concentration profile: the Herfindahl–Hirschman index of
@@ -4709,7 +4715,7 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "embed_ivf_recall",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -4761,6 +4767,7 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
     GROUP BY b.query_id
     """,
+    since=7,
 )
 def embed_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEASURED ANN quality — per-query recall@{_TOP_K} of the IVF
@@ -5354,7 +5361,7 @@ def docs_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "lineitem_skew_report",
     oracle="""
     WITH sizes AS (
@@ -5383,6 +5390,7 @@ def docs_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS skew_factor
     FROM pct
     """,
+    since=8,
 )
 def lineitem_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key SKEW diagnostics — the planning pass a 100 TB pipeline
@@ -5490,7 +5498,7 @@ def _als_share(df: DataFrame) -> DataFrame:
     return df.persist()
 
 
-@staged_r8("embed_als_factorize")  # rows-only: least-squares factors are
+@query("embed_als_factorize", since=8)  # rows-only: least-squares factors are
 # float linear algebra no SQL oracle reproduces; self-check columns below
 def embed_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Alternating Least Squares matrix factorization — the
@@ -5669,7 +5677,7 @@ def embed_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FH_DIM = 64
 
 
-@staged_r8(
+@query(
     "docs_feature_hashing",
     oracle=f"""
     WITH toks AS (
@@ -5692,6 +5700,7 @@ _FH_DIM = 64
     FROM hashed GROUP BY doc_id, dim
     HAVING sum(sign) <> 0
     """,
+    since=8,
 )
 def docs_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashing trick / signed feature hashing (Weinberger et al.
@@ -5731,7 +5740,7 @@ def docs_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "docs_bpe_apply",
     oracle="""
     WITH words AS (
@@ -5782,6 +5791,7 @@ def docs_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_tokens
     FROM applied
     """,
+    since=8,
 )
 def docs_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLY — the inference half completing the trainer
@@ -5887,7 +5897,7 @@ def docs_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "docs_editdist_neardup",
     oracle="""
     WITH d AS (
@@ -5902,6 +5912,7 @@ def docs_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND a.doc_id < b.doc_id
     WHERE levenshtein(a.head, b.head) <= 24
     """,
+    since=8,
 )
 def docs_editdist_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs — the character-level tier of the
@@ -5950,7 +5961,7 @@ def docs_editdist_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "docs_nb_classify",
     oracle="""
     WITH toks AS MATERIALIZED (
@@ -5993,6 +6004,7 @@ def docs_editdist_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
            true_lang = pred_lang AS correct
     FROM ranked WHERE rn = 1
     """,
+    since=8,
 )
 def docs_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial naive Bayes text classifier — the classifier-based
@@ -6074,7 +6086,7 @@ def docs_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SN_W = 4
 
 
-@staged_r8(
+@query(
     "docs_sorted_neighborhood",
     oracle=f"""
     WITH r AS (
@@ -6089,6 +6101,7 @@ _SN_W = 4
            CAST(levenshtein(a.head16, b.head16) AS BIGINT) AS head_dist
     FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND {_SN_W}
     """,
+    since=8,
 )
 def docs_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood dedup blocking (Hernández & Stolfo 1995 —
@@ -6167,7 +6180,7 @@ def docs_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COLL_MIN_N = 5
 
 
-@staged_r8(
+@query(
     "docs_collocations",
     oracle=f"""
     WITH t AS MATERIALIZED (
@@ -6200,6 +6213,7 @@ _COLL_MIN_N = 5
     JOIN uni u2 ON p.w2 = u2.tok
     CROSS JOIN tot
     """,
+    since=8,
 )
 def docs_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining — corpus-level PMI ranking without the log
@@ -6337,8 +6351,8 @@ def _greedy_coverage_oracle(rounds: int) -> str:
     return "".join(parts)
 
 
-@staged_r8(
-    "docs_greedy_coverage", oracle=_greedy_coverage_oracle(_GC_ROUNDS)
+@query(
+    "docs_greedy_coverage", oracle=_greedy_coverage_oracle(_GC_ROUNDS), since=8
 )
 def docs_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy submodular max-coverage corpus selection (the
@@ -6445,7 +6459,7 @@ def docs_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "docs_bigram_drift",
     oracle="""
     WITH raw AS (
@@ -6478,6 +6492,7 @@ def docs_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cnt, tot
     WHERE n_a + n_b >= 20
     """,
+    since=8,
 )
 def docs_bigram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-snapshot DISTRIBUTION DRIFT: the word-bigram occurrence
@@ -6579,7 +6594,7 @@ FROM m GROUP BY pid, doc_id
 """
 
 
-@staged_r8("docs_phrase_search", oracle=_PHRASE_ORACLE)
+@query("docs_phrase_search", oracle=_PHRASE_ORACLE, since=8)
 def docs_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact PHRASE SEARCH over a positional inverted index — the
     retrieval primitive BM25 ranking cannot express (term order and
@@ -6684,7 +6699,7 @@ _DCB_ORACLE = (
 )
 
 
-@staged_r8("docs_decontaminate_bloom", oracle=_DCB_ORACLE)
+@query("docs_decontaminate_bloom", oracle=_DCB_ORACLE, since=8)
 def docs_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination through a BLOOM FILTER of the eval
     set's shingles — how docs_decontaminate actually deploys when the
@@ -6769,7 +6784,7 @@ _DBSCAN_COS = 0.25  # epsilon, as a cosine floor (the near-isotropic
 _DBSCAN_MINN = 2  # core point: >= 2 epsilon-neighbors
 
 
-@staged_r9(
+@query(
     "embed_dbscan_clusters",
     oracle=f"""
     WITH RECURSIVE q AS ({_Q_SQL}),
@@ -6815,6 +6830,7 @@ _DBSCAN_MINN = 2  # core point: >= 2 epsilon-neighbors
     LEFT JOIN clab ON clab.vec_id = emb.vec_id
     LEFT JOIN blab ON blab.vec_id = emb.vec_id
     """,
+    since=9,
 )
 def embed_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN over the embedding corpus — DENSITY clustering, the
@@ -6913,7 +6929,7 @@ def embed_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "docs_cdc_chunk_dedup",
     oracle="""
     WITH pos AS (
@@ -6954,6 +6970,7 @@ def embed_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS saved_bytes_ppm
     FROM t, u
     """,
+    since=9,
 )
 def docs_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTENT-DEFINED CHUNKING dedup — the storage-layer primitive
@@ -7094,7 +7111,7 @@ _CH_POS = (
 _CH_VNODES = 8
 
 
-@staged_r9(
+@query(
     "docs_consistent_hash_ring",
     oracle=f"""
     WITH ringall AS (
@@ -7144,6 +7161,7 @@ _CH_VNODES = 8
       USING (node)
     CROSS JOIN mv
     """,
+    since=9,
 )
 def docs_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONSISTENT-HASH RING sharding with an elastic-rescale audit —
@@ -7266,7 +7284,7 @@ def _trunc_rank_sql(d: int) -> str:
     """
 
 
-@staged_r9(
+@query(
     "embed_dim_truncation_recall",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -7296,6 +7314,7 @@ def _trunc_rank_sql(d: int) -> str:
            summary.recall_ppm
     FROM hits JOIN summary ON summary.dim = hits.dim
     """,
+    since=9,
 )
 def embed_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIMENSION-TRUNCATION recall sweep — the Matryoshka-embedding
@@ -7397,7 +7416,7 @@ def embed_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "docs_rake_keywords",
     oracle="""
     WITH tok AS (
@@ -7442,6 +7461,7 @@ def embed_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM phr GROUP BY phrase
     ORDER BY score_x1000 DESC, phrase LIMIT 20
     """,
+    since=9,
 )
 def docs_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction — the degree-over-frequency phrase
@@ -7537,7 +7557,7 @@ def docs_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "embed_centroid_separation",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -7577,6 +7597,7 @@ def docs_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN scat sa ON sa.label = d.label_a
     JOIN scat sb ON sb.label = d.label_b
     """,
+    since=9,
 )
 def embed_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LABEL-CENTROID separation audit — the Davies-Bouldin /
@@ -7672,7 +7693,7 @@ def embed_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "docs_readability_fk",
     oracle="""
     WITH m AS (
@@ -7695,6 +7716,7 @@ def embed_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(100 * s * w AS BIGINT) AS fk_grade
     FROM m WHERE w >= 10
     """,
+    since=9,
 )
 def docs_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLESCH-KINCAID readability grading — the classic corpus-quality
@@ -7755,7 +7777,7 @@ def docs_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "docs_rank_fusion_rrf",
     oracle="""
     WITH toks AS (
@@ -7796,6 +7818,7 @@ def docs_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     ORDER BY rrf DESC, doc_id LIMIT 20
     """,
+    since=9,
 )
 def docs_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECIPROCAL-RANK FUSION — the standard way hybrid search merges
@@ -7873,7 +7896,7 @@ def docs_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "docs_rice_postings",
     oracle="""
     WITH toks AS (
@@ -7909,6 +7932,7 @@ def docs_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM gaps g JOIN kparam k USING (term)
     GROUP BY g.term, k.df, k.k, k.max_gap
     """,
+    since=9,
 )
 def docs_rice_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RICE/GOLOMB POSTING-LIST compression accounting — the
@@ -7984,7 +8008,7 @@ def docs_rice_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "lineitem_simpson_reversal",
     oracle="""
     WITH x AS (
@@ -8015,6 +8039,7 @@ def docs_rice_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS agrees_with_pooled
     FROM t
     """,
+    since=9,
 )
 def lineitem_simpson_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIMPSON'S-PARADOX audit — the confounding check any metrics
@@ -8083,8 +8108,6 @@ def lineitem_simpson_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Binary quantization ANN (sign bits + Hamming funnel + exact rerank)
 # ---------------------------------------------------------------------------
 
-from virapipe_spark.queries.staged import staged_r10  # noqa: E402
-
 _BQ_PACK_SQL_1 = (
     "list_sum(list_transform(generate_series(1, 32), i -> CASE WHEN"
     " q[i] >= 0 THEN CAST(1 AS BIGINT) << (i - 1) ELSE 0 END))"
@@ -8095,7 +8118,7 @@ _BQ_PACK_SQL_2 = (
 )
 
 
-@staged_r10(
+@query(
     "embed_knn_binary",
     oracle=f"""
     WITH q AS ({_Q_SQL}),
@@ -8148,6 +8171,7 @@ _BQ_PACK_SQL_2 = (
      AND e.neighbor_id = a.neighbor_id
     GROUP BY a.query_id
     """,
+    since=10,
 )
 def embed_knn_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BINARY QUANTIZATION ANN — the 1-bit-per-dimension funnel modern
@@ -8346,7 +8370,7 @@ def _huffman_fold_expr(rounds: int) -> str:
     """
 
 
-@staged_r10("docs_huffman_lengths", oracle=_huffman_oracle())
+@query("docs_huffman_lengths", oracle=_huffman_oracle(), since=10)
 def docs_huffman_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HUFFMAN CODE CONSTRUCTION — the optimal-prefix-code primitive
     under DEFLATE/zstd literal tables and every entropy-coding stage:
@@ -8473,7 +8497,7 @@ def _crc_oracle() -> str:
     """
 
 
-@staged_r10("docs_crc32_relational", oracle=_crc_oracle())
+@query("docs_crc32_relational", oracle=_crc_oracle(), since=10)
 def docs_crc32_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CRC32 AS A RELATIONAL FOLD — the integrity checksum every
     object store and wire protocol stamps on data (S3 ETags, gzip
@@ -8621,7 +8645,7 @@ def _mmr_oracle() -> str:
     """
 
 
-@staged_r10("embed_mmr_rerank", oracle=_mmr_oracle())
+@query("embed_mmr_rerank", oracle=_mmr_oracle(), since=10)
 def embed_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAXIMAL MARGINAL RELEVANCE — the diversity re-ranker every RAG
     retriever and search-results page runs after ANN (Carbonell &
@@ -8836,7 +8860,7 @@ def _tt_oracle() -> str:
     """
 
 
-@staged_r10("docs_texttiling_segments", oracle=_tt_oracle())
+@query("docs_texttiling_segments", oracle=_tt_oracle(), since=10)
 def docs_texttiling_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOPIC SEGMENTATION by lexical-cohesion dips — the TextTiling
     idea (Hearst 1997) that long-document chunkers for RAG pipelines
@@ -9010,7 +9034,7 @@ def _textrank_oracle() -> str:
     """
 
 
-@staged_r10("docs_textrank_keywords", oracle=_textrank_oracle())
+@query("docs_textrank_keywords", oracle=_textrank_oracle(), since=10)
 def docs_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TEXTRANK — graph-based keyword extraction (Mihalcea & Tarau
     2004), the PageRank-on-co-occurrence sibling of RAKE (which ranks

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from virapipe_spark import functions as vf
 from virapipe_spark.catalog import query, table
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 from virapipe_spark.scale import spread_scan
 
 
@@ -973,7 +972,7 @@ def bam_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vbam.read_bam(spark, out)
 
 
-@staged_r7(
+@query(
     "bam_write_roundtrip",
     oracle=f"""
     SELECT concat('w', doc_id) AS "readName",
@@ -986,6 +985,7 @@ def bam_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            (doc_id % 11 = 0) AS "duplicateRead"
     FROM documents WHERE doc_id < 300
     """,
+    since=7,
 )
 def bam_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked DISTRIBUTED binary BAM write→read round-trip —
@@ -1091,7 +1091,7 @@ def bam_split_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vbam.read_bam(spark, out, split_size=4096)
 
 
-@staged_r8(
+@query(
     "sam_pileup_consensus",
     oracle=f"""
     WITH reads AS (
@@ -1120,6 +1120,7 @@ def bam_split_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            depth, base AS consensus, c AS consensus_count
     FROM ranked WHERE rn = 1 AND depth >= 3
     """,
+    since=8,
 )
 def sam_pileup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pileup + consensus calling — the samtools mpileup/consensus
@@ -1187,7 +1188,7 @@ def sam_pileup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KC_K = 5
 
 
-@staged_r8(
+@query(
     "reads_kmer_classify",
     oracle=f"""
     WITH refs AS (
@@ -1225,6 +1226,7 @@ _KC_K = 5
     SELECT doc_id, taxon AS best_taxon, votes, total_hits
     FROM ranked WHERE rn = 1
     """,
+    since=8,
 )
 def reads_kmer_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-mer taxonomic classification — the Kraken-family shape (Wood &
@@ -1324,7 +1326,7 @@ def _flagstat_oracle() -> str:
     """
 
 
-@staged_r8("sam_flagstat", oracle=_flagstat_oracle())
+@query("sam_flagstat", oracle=_flagstat_oracle(), since=8)
 def sam_flagstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """samtools-flagstat parity — THE standard alignment QC summary
     (reference capability class: SQLQueryBAM.java's flag predicates,
@@ -1375,7 +1377,7 @@ def sam_flagstat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "reads_gc_skew_origin",
     oracle=f"""
     WITH seq AS (
@@ -1411,6 +1413,7 @@ def sam_flagstat(spark: SparkSession, sf_dir: str) -> DataFrame:
            skew AS min_skew, final_skew
     FROM best WHERE rn = 1
     """,
+    since=9,
 )
 def reads_gc_skew_origin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative GC-SKEW origin detection — the classic replication-
@@ -1488,7 +1491,6 @@ def reads_gc_skew_origin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # de Bruijn graph unitig compaction (the assembly-graph primitive)
 # ---------------------------------------------------------------------------
 
-from virapipe_spark.queries.staged import staged_r10  # noqa: E402
 from virapipe_spark.graph import connected_components_doubling  # noqa: E402
 from virapipe_spark.scale import truncate_lineage  # noqa: E402
 
@@ -1545,7 +1547,7 @@ def _debruijn_oracle() -> str:
     """
 
 
-@staged_r10("reads_debruijn_unitigs", oracle=_debruijn_oracle())
+@query("reads_debruijn_unitigs", oracle=_debruijn_oracle(), since=10)
 def reads_debruijn_unitigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DE BRUIJN UNITIG COMPACTION — the assembly-graph primitive under
     MegaHit/SPAdes (the reference shells out to MegaHit,
@@ -1778,7 +1780,7 @@ def _sw_best_expr(n: int) -> str:
     """
 
 
-@staged_r10("reads_smith_waterman", oracle=_sw_oracle())
+@query("reads_smith_waterman", oracle=_sw_oracle(), since=10)
 def reads_smith_waterman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMITH-WATERMAN LOCAL ALIGNMENT — the scoring core of BLAST's
     final phase and of every aligner the reference shells out to
@@ -1904,7 +1906,7 @@ def _bwt_oracle() -> str:
     """
 
 
-@staged_r10("reads_bwt_runs", oracle=_bwt_oracle())
+@query("reads_bwt_runs", oracle=_bwt_oracle(), since=10)
 def reads_bwt_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BURROWS-WHEELER TRANSFORM per read — the index core of BWA and
     bowtie (the aligners behind the reference's DistributedBWA pipe)
@@ -2083,7 +2085,7 @@ def _rcp_oracle() -> str:
     """
 
 
-@staged_r10("reads_rc_palindromes", oracle=_rcp_oracle())
+@query("reads_rc_palindromes", oracle=_rcp_oracle(), since=10)
 def reads_rc_palindromes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REVERSE-COMPLEMENT PALINDROME detection — the hairpin/cruciform
     and restriction-site pattern (EcoRI's GAATTC reads the same as its
@@ -2197,7 +2199,7 @@ def _pcq_oracle() -> str:
     """
 
 
-@staged_r10("reads_percycle_quality", oracle=_pcq_oracle())
+@query("reads_percycle_quality", oracle=_pcq_oracle(), since=10)
 def reads_percycle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-CYCLE QUALITY DISTRIBUTION — FastQC's signature
     per-base-quality boxplot (the first QC artifact every sequencing
@@ -2390,7 +2392,7 @@ def _fm_oracle() -> str:
     """
 
 
-@staged_r10("reads_fm_count", oracle=_fm_oracle())
+@query("reads_fm_count", oracle=_fm_oracle(), since=10)
 def reads_fm_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FM-INDEX BACKWARD SEARCH — the exact query BWA answers a
     billion times per run (Ferragina-Manzini 2000): count a pattern's
@@ -2647,7 +2649,7 @@ def _tstv_oracle() -> str:
     """
 
 
-@staged_r10("reads_mutation_spectrum", oracle=_tstv_oracle())
+@query("reads_mutation_spectrum", oracle=_tstv_oracle(), since=10)
 def reads_mutation_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MUTATION SPECTRUM + Ts/Tv — the first line of bcftools stats
     and the standard variant-call QC gate (a human WGS callset's
@@ -2784,7 +2786,7 @@ def _cigar_oracle() -> str:
     """
 
 
-@staged_r10("reads_cigar_walk", oracle=_cigar_oracle())
+@query("reads_cigar_walk", oracle=_cigar_oracle(), since=10)
 def reads_cigar_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CIGAR WALK — the alignment-string accounting samtools performs
     on every record (reference span for indexing/pileup, query span
@@ -2924,7 +2926,7 @@ def _adapter_oracle() -> str:
     """
 
 
-@staged_r10("reads_adapter_trim", oracle=_adapter_oracle())
+@query("reads_adapter_trim", oracle=_adapter_oracle(), since=10)
 def reads_adapter_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3'-ADAPTER DETECTION — cutadapt's core overlap semantics
     (Martin 2011) against the real Illumina TruSeq adapter prefix:
@@ -3022,10 +3024,8 @@ def reads_adapter_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # splits FASTQ: NLineInputFormat line runs, Interleave.java:97,141)
 # ---------------------------------------------------------------------------
 
-from virapipe_spark.queries.staged import staged_r11  # noqa: E402
 
-
-@staged_r11(
+@query(
     "fastq_datasource_scan",
     oracle=f"""
     SELECT concat('r', lpad(CAST(doc_id AS VARCHAR), 5, '0')) AS key,
@@ -3035,6 +3035,7 @@ from virapipe_spark.queries.staged import staged_r11  # noqa: E402
                      '{_QUAL16}') AS quality
     FROM documents WHERE doc_id < 150
     """,
+    since=11,
 )
 def fastq_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``spark.read.format("fastq")`` — the custom Python DataSource
@@ -3079,7 +3080,7 @@ def fastq_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r11(
+@query(
     "fastq_datasource_interleave",
     oracle=f"""
     WITH src AS (
@@ -3102,6 +3103,7 @@ def fastq_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(2 * i + 1 AS BIGINT), concat(stem, '/2'), s2, q2
     FROM src
     """,
+    since=11,
 )
 def fastq_datasource_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paired-FASTQ INTERLEAVE through the Python DataSource — the
@@ -3162,12 +3164,6 @@ def fastq_datasource_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the prior virapipe_chain entry starts from parquet; this one starts
 # from format("fastq") so the connector's split planning, stanza
 # re-parse and '@'-stripping are INSIDE the hash-checked dataflow).
-#
-# Registered LIVE directly (no staging generation): the r11 ADVICE
-# adjudicated the staged-generation freeze a pass-through once arming
-# artifacts pre-exist at authoring time, so the staging machinery is
-# retired for new entries — ordered_queries() ranks never-proven names
-# first, which gives a new entry its in-round driver proof anyway.
 # ---------------------------------------------------------------------------
 
 
@@ -3295,7 +3291,7 @@ def fastq_datasource_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r11(
+@query(
     "synthetic_reads_scan",
     oracle="""
     SELECT CAST(i AS BIGINT) AS read_id,
@@ -3308,6 +3304,7 @@ def fastq_datasource_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
              (a, b) -> a || b) AS quality
     FROM (SELECT unnest(generate_series(0, 199)) AS i)
     """,
+    since=11,
 )
 def synthetic_reads_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ORIGINAL custom Python DataSource (pydatasource.py's

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from virapipe_spark.catalog import query, table
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 from virapipe_spark.scale import spread_scan, truncate_lineage
 
 
@@ -524,7 +523,7 @@ def multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "multimodal_tiff_features",
     oracle="""
     WITH s AS (
@@ -541,6 +540,7 @@ def multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(stddev_pop(code), 4) AS std_intensity
     FROM v GROUP BY doc_id
     """,
+    since=7,
 )
 def multimodal_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKED baseline-TIFF decode — the codec family's
@@ -600,7 +600,7 @@ def multimodal_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "multimodal_audio_resample",
     oracle="""
     WITH s AS (
@@ -615,6 +615,7 @@ def multimodal_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INTEGER) AS sample
     FROM j
     """,
+    since=7,
 )
 def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKED audio sample-rate conversion — the composed audio
@@ -925,7 +926,7 @@ def multimodal_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     return mm.sample_frames(media, every_ms=100)
 
 
-@staged_r8(
+@query(
     "multimodal_dhash_neardup",
     oracle="""
     WITH s AS (
@@ -988,6 +989,7 @@ def multimodal_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
            coalesce(agg.n_dup, 0) AS n_dup
     FROM h LEFT JOIN agg ON h.media_id = agg.media_id
     """,
+    since=8,
 )
 def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image dedup — the MULTIMODAL member of the
@@ -1104,7 +1106,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHOT_THR = 2000  # |delta mean_x100| > 2000 <=> mean jump > 20 gray levels
 
 
-@staged_r8(
+@query(
     "multimodal_shot_boundaries",
     oracle=f"""
     WITH s AS (
@@ -1136,6 +1138,7 @@ _SHOT_THR = 2000  # |delta mean_x100| > 2000 <=> mean jump > 20 gray levels
            CAST(sum(mean_x100) AS BIGINT) AS sum_mean_x100
     FROM shots GROUP BY doc_id, shot_id
     """,
+    since=8,
 )
 def multimodal_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary detection — the video-analytics operator above
@@ -1216,7 +1219,7 @@ _VAD_LO = 40_000_000
 _VAD_HI = 70_000_000
 
 
-@staged_r8(
+@query(
     "multimodal_vad_segments",
     oracle=f"""
     WITH s AS (
@@ -1260,6 +1263,7 @@ _VAD_HI = 70_000_000
            bool_or(active) AND max(energy) > {_VAD_HI} AS is_speech
     FROM runs GROUP BY doc_id, run_id
     """,
+    since=8,
 )
 def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voice-activity detection with HYSTERESIS — the audio-analytics
@@ -1397,7 +1401,7 @@ _DFT_POWER = (
 )
 
 
-@staged_r8(
+@query(
     "multimodal_dft_bins",
     oracle=f"""
     WITH s AS (
@@ -1424,6 +1428,7 @@ _DFT_POWER = (
            CAST({_DFT_POWER.replace(' div ', ' // ')} AS BIGINT) AS power_q
     FROM x
     """,
+    since=8,
 )
 def multimodal_dft_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer DFT-BIN spectral energy — the frequency-domain
@@ -1513,7 +1518,7 @@ _SOBEL_OFF = [
 _SOBEL_VALUES = ", ".join(f"({dx}, {dy}, {wx}, {wy})" for dx, dy, wx, wy in _SOBEL_OFF)
 
 
-@staged_r8(
+@query(
     "multimodal_sobel_energy",
     oracle=f"""
     WITH s AS (
@@ -1544,6 +1549,7 @@ _SOBEL_VALUES = ", ".join(f"({dx}, {dy}, {wx}, {wy})" for dx, dy, wx, wy in _SOB
            CAST(max(gx * gx + gy * gy) AS BIGINT) AS max_grad2
     FROM g GROUP BY doc_id
     """,
+    since=8,
 )
 def multimodal_sobel_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RELATIONAL CONVOLUTION — the 3x3 Sobel gradient as pure
@@ -1653,7 +1659,7 @@ def multimodal_sobel_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PITCH_LAGS = (2, 16)  # candidate period range, in samples
 
 
-@staged_r9(
+@query(
     "multimodal_pitch_autocorr",
     oracle=f"""
     WITH s AS (
@@ -1687,6 +1693,7 @@ _PITCH_LAGS = (2, 16)  # candidate period range, in samples
            acorr AS peak_acorr
     FROM best WHERE rn = 1
     """,
+    since=9,
 )
 def multimodal_pitch_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-DOMAIN PITCH detection — the autocorrelation-argmax
@@ -1784,7 +1791,7 @@ _OTSU_SCORE = (
 )
 
 
-@staged_r9(
+@query(
     "multimodal_otsu_threshold",
     oracle=f"""
     WITH s AS (
@@ -1829,6 +1836,7 @@ _OTSU_SCORE = (
            CAST(n0 AS BIGINT) AS n_below, CAST(n1 AS BIGINT) AS n_above
     FROM best WHERE rn = 1
     """,
+    since=9,
 )
 def multimodal_otsu_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTSU THRESHOLDING — the automatic binarization algorithm (the
@@ -1939,7 +1947,7 @@ _SAT_SRC = """
 """
 
 
-@staged_r9(
+@query(
     "multimodal_integral_boxsum",
     oracle=f"""
     WITH s AS ({_SAT_SRC}),
@@ -1975,6 +1983,7 @@ _SAT_SRC = """
     FROM best b JOIN tot t ON t.media_id = b.media_id
     WHERE b.rn = 1
     """,
+    since=9,
 )
 def multimodal_integral_boxsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTEGRAL-IMAGE (summed-area table) box filter — the Viola-
@@ -2106,7 +2115,7 @@ def multimodal_integral_boxsum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "multimodal_hist_equalize",
     oracle=f"""
     WITH s AS ({_SAT_SRC}),
@@ -2143,6 +2152,7 @@ def multimodal_integral_boxsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM px JOIN eq ON eq.media_id = px.media_id AND eq.v = px.v
     GROUP BY px.media_id
     """,
+    since=9,
 )
 def multimodal_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HISTOGRAM EQUALIZATION — the contrast-normalization remap
@@ -2260,7 +2270,7 @@ def _haar_oracle(levels: int = 6) -> str:
     return src + "," + ",".join(parts) + unions
 
 
-@staged_r9("multimodal_haar_energy", oracle=_haar_oracle())
+@query("multimodal_haar_energy", oracle=_haar_oracle(), since=9)
 def multimodal_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAAR WAVELET band energy over 64-sample audio frames — the
     multi-resolution spectral summary (the transform behind dHash's
@@ -2334,7 +2344,7 @@ def multimodal_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "multimodal_morph_open",
     oracle=f"""
     WITH s AS ({_SAT_SRC}),
@@ -2381,6 +2391,7 @@ def multimodal_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN ne ON ne.media_id = nf.media_id
     LEFT JOIN no_ ON no_.media_id = nf.media_id
     """,
+    since=9,
 )
 def multimodal_morph_open(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BINARY MORPHOLOGY — 3x3 OPENING (erosion then dilation), the
@@ -2493,7 +2504,7 @@ def multimodal_morph_open(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "multimodal_image_moments",
     oracle=f"""
     WITH s AS ({_SAT_SRC}),
@@ -2524,6 +2535,7 @@ def multimodal_morph_open(spark: SparkSession, sf_dir: str) -> DataFrame:
                        THEN 2 ELSE 1 END AS BIGINT) AS orient_class
     FROM m
     """,
+    since=9,
 )
 def multimodal_image_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE MOMENTS — the shape-descriptor aggregate behind blob
@@ -2631,7 +2643,7 @@ def _region_label_expr(col: str = "p") -> str:
     """
 
 
-@staged_r9(
+@query(
     "multimodal_region_label",
     oracle=f"""
     WITH RECURSIVE s AS ({_SAT_SRC}),
@@ -2674,6 +2686,7 @@ def _region_label_expr(col: str = "p") -> str:
     FROM lab l JOIN fg f ON f.media_id = l.media_id AND f.pid = l.pid
     GROUP BY l.media_id, l.label
     """,
+    since=9,
 )
 def multimodal_region_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONNECTED-COMPONENT region LABELING — the blob-extraction step
@@ -2842,7 +2855,7 @@ def _dtw_dp_expr(n: int) -> str:
     """
 
 
-@staged_r9("multimodal_dtw_distance", oracle=_dtw_oracle())
+@query("multimodal_dtw_distance", oracle=_dtw_oracle(), since=9)
 def multimodal_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC TIME WARPING — the elastic alignment distance for
     series that drift in tempo (audio fingerprint matching, sensor
@@ -2905,8 +2918,6 @@ def multimodal_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Median-cut palette quantization (3 levels -> 8-color corpus palette)
 # ---------------------------------------------------------------------------
-
-from virapipe_spark.queries.staged import staged_r10  # noqa: E402
 
 _MC_LEVELS = 3
 
@@ -2977,7 +2988,7 @@ def _mc_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_median_cut", oracle=_mc_oracle())
+@query("multimodal_median_cut", oracle=_mc_oracle(), since=10)
 def multimodal_median_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEDIAN-CUT color quantization — the classic palette builder
     (Heckbert '82; GIF/PNG8 encoders, thumbnail dominant-color
@@ -3166,7 +3177,7 @@ def _hough_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_hough_lines", oracle=_hough_oracle())
+@query("multimodal_hough_lines", oracle=_hough_oracle(), since=10)
 def multimodal_hough_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOUGH TRANSFORM line detection — the classical vote-in-parameter-
     space detector (lane finding, document deskew, PCB inspection) in
@@ -3332,7 +3343,7 @@ def _dt_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_distance_transform", oracle=_dt_oracle())
+@query("multimodal_distance_transform", oracle=_dt_oracle(), since=10)
 def multimodal_distance_transform(spark: SparkSession, sf_dir: str
                                   ) -> DataFrame:
     """EXACT MANHATTAN DISTANCE TRANSFORM — the feature-proximity map
@@ -3533,7 +3544,7 @@ def _ch_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_convex_hull", oracle=_ch_oracle())
+@query("multimodal_convex_hull", oracle=_ch_oracle(), since=10)
 def multimodal_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONVEX HULL VERTEX IDENTIFICATION — the computational-geometry
     primitive (bounding shapes, outlier frontiers, collision proxies)
@@ -3757,7 +3768,7 @@ def _reg_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_image_registration", oracle=_reg_oracle())
+@query("multimodal_image_registration", oracle=_reg_oracle(), since=10)
 def multimodal_image_registration(spark: SparkSession, sf_dir: str
                                   ) -> DataFrame:
     """IMAGE REGISTRATION by cross-correlation argmax — the alignment
@@ -3957,7 +3968,7 @@ def _mf_oracle() -> str:
     """
 
 
-@staged_r10("multimodal_median_filter", oracle=_mf_oracle())
+@query("multimodal_median_filter", oracle=_mf_oracle(), since=10)
 def multimodal_median_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3x3 MEDIAN FILTER — the standard salt-and-pepper denoiser and
     the canonical RANK-ORDER (non-linear) filter the convolution

@@ -18,7 +18,6 @@ from virapipe_spark.scale import (
     truncate_lineage,
     two_phase_rank,
 )
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 
 
 # ---------------------------------------------------------------------------
@@ -1821,10 +1820,7 @@ def parts_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from virapipe_spark.queries.staged import staged_r7
-
-
-@staged_r7(
+@query(
     "agg_grouping_sets",
     oracle="""
     SELECT o_orderpriority, o_orderstatus,
@@ -1835,6 +1831,7 @@ from virapipe_spark.queries.staged import staged_r7
     GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
                             (o_orderpriority), ())
     """,
+    since=7,
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the custom slice of the grouping
@@ -1886,7 +1883,7 @@ _BF_POS = (
 )
 
 
-@staged_r7(
+@query(
     "join_bloom_prefilter",
     oracle=f"""
     WITH build AS (
@@ -1919,6 +1916,7 @@ _BF_POS = (
            (SELECT count(*) FROM exact WHERE k IN (SELECT k FROM cand))
              = (SELECT count(*) FROM exact) AS no_false_negatives
     """,
+    since=7,
 )
 def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter join pre-filtering — the runtime row-level
@@ -2007,7 +2005,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "graph_bfs_hops",
     oracle="""
     WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -2035,6 +2033,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, CAST(min(d) AS INTEGER) AS dist
     FROM walk GROUP BY node
     """,
+    since=7,
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance (`graph.bfs_hops`, <= 3 hops) over
@@ -2071,7 +2070,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_hops(edges, sources, max_hops=3)
 
 
-@staged_r7(
+@query(
     "parts_fuzzy_pairs",
     oracle="""
     WITH names AS (
@@ -2085,6 +2084,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM names a JOIN names b ON a.blk = b.blk AND a.pk < b.pk
     WHERE levenshtein(a.p_name, b.p_name) <= 3
     """,
+    since=7,
 )
 def parts_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked edit-distance fuzzy matching — the entity-resolution
@@ -2123,7 +2123,7 @@ def parts_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "lineitem_dq_audit",
     oracle="""
     WITH base AS (
@@ -2153,6 +2153,7 @@ def parts_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS ranges_ok
     FROM base, dup
     """,
+    since=7,
 )
 def lineitem_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectation audit (the Deequ/Great-Expectations
@@ -2216,7 +2217,7 @@ def lineitem_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "lineitem_abc_analysis",
     oracle="""
     WITH rev AS (
@@ -2239,6 +2240,7 @@ def lineitem_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'C' END AS abc_class
     FROM ranked r, tot t
     """,
+    since=7,
 )
 def lineitem_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC (Pareto) inventory classification: parts ranked by exact
@@ -2328,7 +2330,7 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     return "".join(parts)
 
 
-@staged_r8("graph_kcore", oracle=_kcore_oracle(k=2, rounds=6))
+@query("graph_kcore", oracle=_kcore_oracle(k=2, rounds=6), since=8)
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition (k=2) of the part co-purchase graph —
     the iterative PEELING member of the graph family (CC, PageRank,
@@ -2363,7 +2365,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "graph_hits_bipartite",
     oracle="""
     WITH e AS (
@@ -2391,6 +2393,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'auth' AS side, auth AS node, auth_score AS score FROM a2
     """,
+    since=8,
 )
 def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over the bipartite
@@ -2439,7 +2442,7 @@ _CM_W = 262144
 _CM_D = 3
 
 
-@staged_r8(
+@query(
     "join_size_estimate_cm",
     oracle=f"""
     WITH a AS (
@@ -2485,6 +2488,7 @@ _CM_D = 3
            round(CAST(s.est_size AS DOUBLE) / e.exact_size, 4) AS ratio
     FROM exact e, est s
     """,
+    since=8,
 )
 def join_size_estimate_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based JOIN-SIZE estimation — the count-min inner-product
@@ -2580,7 +2584,7 @@ def join_size_estimate_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EQD_B = 8
 
 
-@staged_r8(
+@query(
     "lineitem_equidepth_histogram",
     oracle=f"""
     WITH x AS (
@@ -2602,6 +2606,7 @@ _EQD_B = 8
            CAST(count(*) AS BIGINT) AS n_rows
     FROM bucketed GROUP BY b
     """,
+    since=8,
 )
 def lineitem_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram — the ANALYZE TABLE statistic a
@@ -2672,7 +2677,7 @@ def _profile_oracle() -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-@staged_r8("lineitem_column_profile", oracle=_profile_oracle())
+@query("lineitem_column_profile", oracle=_profile_oracle(), since=8)
 def lineitem_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column table profile — the ANALYZE-TABLE/stats-collection
     pass that precedes any 100 TB tuning decision (broadcast
@@ -2778,7 +2783,7 @@ def _lpa_oracle(rounds: int) -> str:
     return "".join(parts)
 
 
-@staged_r8("graph_label_propagation", oracle=_lpa_oracle(rounds=4))
+@query("graph_label_propagation", oracle=_lpa_oracle(rounds=4), since=8)
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation over the
     part co-purchase graph (the kcore fixture) — the COMMUNITY member
@@ -2812,7 +2817,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HMED_BUCKET = 100000  # $1000-wide histogram buckets in cents
 
 
-@staged_r8(
+@query(
     "lineitem_histogram_median",
     oracle="""
     WITH pts AS (
@@ -2836,6 +2841,7 @@ _HMED_BUCKET = 100000  # $1000-wide histogram buckets in cents
     FROM cum WHERE cle >= (n + 1) // 2
     GROUP BY flag
     """,
+    since=8,
 )
 def lineitem_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed median WITHOUT a global row sort — the
@@ -2911,7 +2917,7 @@ def lineitem_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "orders_ri_audit",
     oracle="""
     WITH li AS (
@@ -2950,6 +2956,7 @@ def lineitem_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                          ELSE 0 END) AS BIGINT) AS max_abs_diff_cents
     FROM j
     """,
+    since=8,
 )
 def orders_ri_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-table referential-integrity audit — the dq_audit class
@@ -3030,7 +3037,7 @@ def _benford_case() -> str:
     return f"CASE digit {whens} END"
 
 
-@staged_r8(
+@query(
     "lineitem_benford_audit",
     oracle=f"""
     WITH digits AS (
@@ -3053,6 +3060,7 @@ def _benford_case() -> str:
              AS flagged
     FROM counts
     """,
+    since=8,
 )
 def lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit — the forensic-accounting
@@ -3099,7 +3107,7 @@ def lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "lineitem_gini_lorenz",
     oracle="""
     WITH rev AS (
@@ -3126,6 +3134,7 @@ def lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (n * total), 4) AS gini
     FROM ranked
     """,
+    since=8,
 )
 def lineitem_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve + Gini coefficient of supplier revenue — the
@@ -3287,7 +3296,7 @@ def _sssp_finish(
     )
 
 
-@staged_r8("graph_sssp_weighted", oracle=_sssp_oracle(rounds=10))
+@query("graph_sssp_weighted", oracle=_sssp_oracle(rounds=10), since=8)
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source WEIGHTED shortest paths (Bellman-Ford) over the
     part co-purchase graph — the weighted member of the iterative
@@ -3332,7 +3341,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "lineitem_bucket_fingerprint",
     oracle="""
     WITH rows_h AS (
@@ -3346,6 +3355,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(bit_xor(h) AS BIGINT) AS xor_digest
     FROM rows_h GROUP BY bucket
     """,
+    since=8,
 )
 def lineitem_bucket_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent bucketed DATASET FINGERPRINT — the
@@ -3394,7 +3404,7 @@ def lineitem_bucket_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8(
+@query(
     "orders_cascade_delete",
     oracle="""
     WITH del_c AS (
@@ -3425,6 +3435,7 @@ def lineitem_bucket_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
        WHERE o_custkey IN (SELECT c_custkey FROM del_c)) = 0
         AS no_orphaned_orders
     """,
+    since=8,
 )
 def orders_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASCADE-DELETE propagation — the GDPR/right-to-erasure shape:
@@ -3502,7 +3513,7 @@ def orders_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "lineitem_rounding_drift",
     oracle="""
     WITH ln AS (
@@ -3526,6 +3537,7 @@ def orders_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(round_then_sum_cents) AS BIGINT) AS total_cents_rts
     FROM per_order GROUP BY drift_cents
     """,
+    since=9,
 )
 def lineitem_rounding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROUNDING-DRIFT audit — the finance-pipeline invariant check:
@@ -3587,7 +3599,7 @@ def lineitem_rounding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "lineitem_fifo_matching",
     oracle="""
     WITH b AS (
@@ -3636,6 +3648,7 @@ def lineitem_rounding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS fully_allocated
     FROM tot LEFT JOIN agg ON agg.pk = tot.pk
     """,
+    since=9,
 )
 def lineitem_fifo_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFO ALLOCATION MATCHING — the inventory-accounting / order-
@@ -3729,7 +3742,7 @@ def lineitem_fifo_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "graph_clustering_coeff",
     oracle="""
     WITH pairs AS (
@@ -3765,6 +3778,7 @@ def lineitem_fifo_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg LEFT JOIN tri ON tri.node = deg.node
     WHERE deg.degree >= 2
     """,
+    since=9,
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOCAL clustering coefficient — graph_triangle_count made
@@ -3836,7 +3850,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "graph_link_prediction",
     oracle="""
     WITH pairs AS (
@@ -3885,6 +3899,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rank AS BIGINT) AS rank
     FROM ranked WHERE rank <= 50
     """,
+    since=9,
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LINK PREDICTION by common-neighbor count and neighborhood
@@ -3965,7 +3980,7 @@ _ZM_LO = "DATE '1994-03-01'"
 _ZM_HI = "DATE '1994-04-30'"
 
 
-@staged_r9(
+@query(
     "lineitem_zonemap_prune",
     oracle=f"""
     WITH rows_ AS (
@@ -4013,6 +4028,7 @@ _ZM_HI = "DATE '1994-04-30'"
              AS amplification_ppm
     FROM zones GROUP BY layout
     """,
+    since=9,
 )
 def lineitem_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZONE-MAP pruning audit — min/max data-skipping statistics (the
@@ -4093,7 +4109,7 @@ def lineitem_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "graph_mst_boruvka",
     oracle="""
     WITH RECURSIVE pairs AS (
@@ -4124,6 +4140,7 @@ def lineitem_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1 FROM r WHERE r.ecost = e.cost AND r.node = e.pb
     )
     """,
+    since=9,
 )
 def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MINIMUM SPANNING FOREST by distributed BORUVKA over the
@@ -4180,7 +4197,7 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "lineitem_weighted_median",
     oracle="""
     WITH v AS (
@@ -4204,6 +4221,7 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS wp75
     FROM c GROUP BY flag
     """,
+    since=9,
 )
 def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED QUANTILES — the unit-weighted percentile family
@@ -4262,7 +4280,7 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "orders_queue_waiting",
     oracle="""
     WITH q AS (
@@ -4298,6 +4316,7 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(s) AS BIGINT) AS busy_seconds
     FROM p GROUP BY worker
     """,
+    since=9,
 )
 def orders_queue_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUEUE-WAITING-TIME reconstruction — the single-server Lindley
@@ -4372,7 +4391,7 @@ def orders_queue_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "lineitem_merkle_tree",
     oracle="""
     WITH rows_h AS (
@@ -4427,6 +4446,7 @@ def orders_queue_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 1, idx, digest FROM l1
     UNION ALL SELECT 0, idx, digest FROM l0
     """,
+    since=9,
 )
 def lineitem_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERKLE TREE over the dataset — the hierarchical commitment that
@@ -4542,7 +4562,7 @@ def _soundex_sql(word: str) -> str:
     )
 
 
-@staged_r9(
+@query(
     "parts_phonetic_blocking",
     oracle=f"""
     WITH w AS (
@@ -4560,6 +4580,7 @@ def _soundex_sql(word: str) -> str:
            CAST(max(p_partkey) AS BIGINT) AS max_part
     FROM coded GROUP BY sdx
     """,
+    since=9,
 )
 def parts_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PHONETIC BLOCKING for record linkage — the Soundex pass that
@@ -4694,7 +4715,7 @@ def _bipartite_finish(
 
 
 
-@staged_r9(
+@query(
     "graph_bipartite_check",
     oracle="""
     WITH RECURSIVE pairs AS (
@@ -4748,6 +4769,7 @@ def _bipartite_finish(
     FROM nstat n JOIN marked m ON m.comp = n.comp
     GROUP BY n.comp, n.n_nodes, n.max_dist
     """,
+    since=9,
 )
 def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BIPARTITENESS audit by BFS 2-COLORING — the structural
@@ -4803,13 +4825,11 @@ def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Harmonic centrality from pinned sources (exact rational distances)
 # ---------------------------------------------------------------------------
 
-from virapipe_spark.queries.staged import staged_r10  # noqa: E402
-
 #: lcm(1..16): every 1/d with d <= 16 is exact as _HC_LCM // d
 _HC_LCM = 720720
 
 
-@staged_r10(
+@query(
     "graph_harmonic_centrality",
     oracle=f"""
     WITH RECURSIVE pairs AS (
@@ -4846,6 +4866,7 @@ _HC_LCM = 720720
            CAST(max(d) AS BIGINT) AS max_dist
     FROM dist GROUP BY s
     """,
+    since=10,
 )
 def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARMONIC CENTRALITY from pinned sources — the closeness variant
@@ -5026,7 +5047,7 @@ def _mis_oracle() -> str:
     """
 
 
-@staged_r10("graph_mis_luby", oracle=_mis_oracle())
+@query("graph_mis_luby", oracle=_mis_oracle(), since=10)
 def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAXIMAL INDEPENDENT SET by DERANDOMIZED LUBY — the symmetry-
     breaking primitive behind parallel graph coloring, scheduling and
@@ -5299,7 +5320,7 @@ def _gs_oracle() -> str:
     """
 
 
-@staged_r10("supplier_stable_matching", oracle=_gs_oracle())
+@query("supplier_stable_matching", oracle=_gs_oracle(), since=10)
 def supplier_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STABLE MATCHING by BATCH GALE-SHAPLEY deferred acceptance — the
     two-sided market-assignment primitive (residency match, ad
@@ -5591,7 +5612,7 @@ def _ds_oracle() -> str:
     """
 
 
-@staged_r10("graph_densest_subgraph", oracle=_ds_oracle())
+@query("graph_densest_subgraph", oracle=_ds_oracle(), since=10)
 def graph_densest_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DENSEST SUBGRAPH by BATCH PEELING — Bahmani-Kumar-
     Vassilvitskii (VLDB'12), THE MapReduce densest-subgraph algorithm
@@ -5732,7 +5753,7 @@ def _pi_oracle() -> str:
     """
 
 
-@staged_r10("lineitem_price_index", oracle=_pi_oracle())
+@query("lineitem_price_index", oracle=_pi_oracle(), since=10)
 def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRICE INDEX NUMBERS — the Laspeyres / Paasche / Fisher family
     every statistics office and pricing team computes (CPI
@@ -5855,7 +5876,7 @@ def _ledger_oracle() -> str:
     """
 
 
-@staged_r10("orders_ledger_reconcile", oracle=_ledger_oracle())
+@query("orders_ledger_reconcile", oracle=_ledger_oracle(), since=10)
 def orders_ledger_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOUBLE-ENTRY RECONCILIATION — the controls job every finance
     close runs (match the AR subledger against revenue postings, list
@@ -5988,7 +6009,7 @@ def _euler_oracle() -> str:
     """
 
 
-@staged_r10("graph_euler_check", oracle=_euler_oracle())
+@query("graph_euler_check", oracle=_euler_oracle(), since=10)
 def graph_euler_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EULER CIRCUIT/PATH EXISTENCE — the theorem that founded graph
     theory (Euler 1736), decided per connected component by pure
@@ -6096,7 +6117,7 @@ def _shapley_oracle() -> str:
     """
 
 
-@staged_r10("supplier_airport_shapley", oracle=_shapley_oracle())
+@query("supplier_airport_shapley", oracle=_shapley_oracle(), since=10)
 def supplier_airport_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHAPLEY VALUE cost allocation for the AIRPORT GAME
     (Littlechild & Owen 1973) — the cooperative-game answer to "who
@@ -6238,7 +6259,7 @@ def _nv_oracle() -> str:
     """
 
 
-@staged_r10("lineitem_newsvendor", oracle=_nv_oracle())
+@query("lineitem_newsvendor", oracle=_nv_oracle(), since=10)
 def lineitem_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEWSVENDOR CRITICAL FRACTILE — the inventory-theory cornerstone
     (stock q* = the cu/(cu+co) demand quantile minimizes expected
@@ -6389,7 +6410,7 @@ def _assort_oracle() -> str:
     """
 
 
-@staged_r10("graph_assortativity", oracle=_assort_oracle())
+@query("graph_assortativity", oracle=_assort_oracle(), since=10)
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEGREE ASSORTATIVITY — Newman's r (2002), the one number that
     separates social-style graphs (hubs befriend hubs, r > 0) from

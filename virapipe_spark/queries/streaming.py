@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from virapipe_spark.catalog import query, table
-from virapipe_spark.queries.staged import staged_r7, staged_r8, staged_r9
 from virapipe_spark import streaming as vstream
 from virapipe_spark.scale import KeyedRanges, spread_scan, truncate_lineage
 
@@ -1314,7 +1313,7 @@ _CM_BUCKET = (
 )
 
 
-@staged_r7(
+@query(
     "events_count_min",
     oracle=f"""
     WITH per_user AS (
@@ -1337,6 +1336,7 @@ _CM_BUCKET = (
     FROM hashed h JOIN counters c ON h.j = c.j AND h.bucket = c.bucket
     GROUP BY h.user_id
     """,
+    since=7,
 )
 def events_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch — the third mergeable sketch beside HLL
@@ -1388,7 +1388,7 @@ def events_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_stream_interval_left",
     oracle="""
     SELECT v.user_id,
@@ -1401,6 +1401,7 @@ def events_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND c.ts >= v.ts
       AND epoch_us(c.ts) - epoch_us(v.ts) <= 4::BIGINT * 3600 * 1000000
     """,
+    since=7,
 )
 def events_stream_interval_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the stream-stream LEFT OUTER attribution join
@@ -1435,7 +1436,7 @@ _AB_Z = (
 )
 
 
-@staged_r7(
+@query(
     "events_ab_test_zscore",
     oracle=f"""
     WITH arms AS (
@@ -1463,6 +1464,7 @@ _AB_Z = (
            abs({_AB_Z}) >= 1.96 AS significant_95
     FROM agg
     """,
+    since=7,
 )
 def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment analysis: two-proportion pooled z-test on per-user
@@ -1525,7 +1527,7 @@ def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_rfm_segments",
     oracle=f"""
     WITH per_user AS (
@@ -1546,6 +1548,7 @@ def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS m_seg
     FROM per_user
     """,
+    since=7,
 )
 def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the classic customer-value quartiling:
@@ -1601,7 +1604,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_cohort_ltv",
     oracle=f"""
     WITH firsts AS (
@@ -1628,6 +1631,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
              // s.n_users AS ltv_cents_per_user
     FROM daily d JOIN sizes s USING (cohort)
     """,
+    since=7,
 )
 def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curves — cumulative value per signup cohort by age
@@ -1675,7 +1679,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_streak_lengths",
     oracle=f"""
     WITH days AS (
@@ -1699,6 +1703,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(streak_start) AS BIGINT) AS first_day
     FROM streaks GROUP BY user_id
     """,
+    since=7,
 )
 def events_streak_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day activity streak per user — the
@@ -1732,7 +1737,7 @@ def events_streak_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_variant_extract",
     oracle="""
     SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 2 AS k_parity,
@@ -1744,6 +1749,7 @@ def events_streak_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY k_parity
     """,
+    since=7,
 )
 def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction through Spark 4's VARIANT type —
@@ -1775,7 +1781,7 @@ def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_unpivot_metrics",
     oracle=f"""
     WITH wide AS (
@@ -1796,6 +1802,7 @@ def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT day, 'purchases' AS metric, purchases AS n FROM wide
     )
     """,
+    since=7,
 )
 def events_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long reshaping via the DataFrame-native `unpivot` (melt) —
@@ -1825,7 +1832,7 @@ def events_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r7(
+@query(
     "events_change_point",
     oracle=f"""
     WITH daily AS (
@@ -1852,6 +1859,7 @@ def events_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS is_changepoint
     FROM dev v
     """,
+    since=7,
 )
 def events_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline changepoint detection on the daily event-count series —
@@ -2146,7 +2154,7 @@ def events_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_stump_classifier",
     oracle="""
     WITH pts AS (
@@ -2196,6 +2204,7 @@ def events_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
            correct >= greatest(pos_all, n_all - pos_all) AS beats_baseline
     FROM best WHERE rn = 1
     """,
+    since=8,
 )
 def events_stump_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decision-stump training (the 1R / depth-1 tree learner — the
@@ -2280,7 +2289,7 @@ def events_stump_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTR_LOOKBACK_US = 72 * 3600 * 1000000
 
 
-@staged_r8(
+@query(
     "events_attribution_ushape",
     oracle=f"""
     WITH conv AS (
@@ -2324,6 +2333,7 @@ _ATTR_LOOKBACK_US = 72 * 3600 * 1000000
              = 1000000 AS conv_total_ok
     FROM credited
     """,
+    since=8,
 )
 def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-shaped (position-based) multi-touch attribution — the
@@ -2404,7 +2414,7 @@ def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_dow_seasonal",
     oracle=f"""
     WITH daily AS (
@@ -2429,6 +2439,7 @@ def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM daily d JOIN base b
       ON d.event_type = b.event_type AND d.day % 7 = b.dow
     """,
+    since=8,
 )
 def events_dow_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal decomposition — the seasonality member of
@@ -2486,7 +2497,7 @@ _HH_D = 3
 # every share 10x while per-key counts stay ~Poisson(67))
 
 
-@staged_r8(
+@query(
     "events_cm_heavy_hitters",
     oracle=f"""
     WITH exact AS (
@@ -2518,6 +2529,7 @@ _HH_D = 3
     FROM est s JOIN exact e ON s.k = e.k, tot t
     WHERE s.est >= (6 * t.n) // (5 * t.nk)
     """,
+    since=8,
 )
 def events_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters by count-min probe — the FREQUENT-ITEMS member of
@@ -2599,7 +2611,7 @@ def events_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_ohlc_daily",
     oracle=f"""
     WITH pts AS (
@@ -2628,6 +2640,7 @@ def events_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(cents) AS BIGINT) AS volume_cents
     FROM ranked GROUP BY event_type, day
     """,
+    since=8,
 )
 def events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC bars per event type — the candlestick downsampling
@@ -2676,7 +2689,7 @@ def events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_twap_user",
     oracle="""
     WITH pts AS (
@@ -2699,6 +2712,7 @@ def events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM held WHERE held_us IS NOT NULL
     GROUP BY user_id
     """,
+    since=8,
 )
 def events_twap_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average (TWAP) per user — the irregular-sampling
@@ -2744,7 +2758,7 @@ def events_twap_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_calendar_spine",
     oracle=f"""
     WITH daily AS (
@@ -2775,6 +2789,7 @@ def events_twap_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM spine s LEFT JOIN daily dl
       ON s.user_id = dl.user_id AND s.day = dl.day
     """,
+    since=8,
 )
 def events_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-spine gap fill — the resample/reindex operator every
@@ -2843,7 +2858,7 @@ def events_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CV_K = 5
 
 
-@staged_r8(
+@query(
     "events_stump_cv",
     oracle=f"""
     WITH pts AS (
@@ -2906,6 +2921,7 @@ _CV_K = 5
              AS no_generalization_gain
     FROM best WHERE rn = 1
     """,
+    since=8,
 )
 def events_stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-fold cross-validation of the decision stump — model SELECTION
@@ -3037,7 +3053,7 @@ def events_stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_HORIZON_D = 7
 
 
-@staged_r8(
+@query(
     "events_kaplan_meier",
     oracle=f"""
     WITH s AS (
@@ -3082,6 +3098,7 @@ _KM_HORIZON_D = 7
              AS survival
     FROM risk ORDER BY t
     """,
+    since=8,
 )
 def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival estimation — the time-to-event analytics
@@ -3158,7 +3175,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_r8(
+@query(
     "events_path_trigrams",
     oracle=f"""
     WITH ordered AS (
@@ -3192,6 +3209,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e1, e2, e3
     QUALIFY row_number() OVER (ORDER BY count(*) DESC, e1, e2, e3) <= 25
     """,
+    since=8,
 )
 def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session path mining — the top-25 three-step event sequences
@@ -3274,7 +3292,7 @@ _ACF_EXPR = (
 )
 
 
-@staged_r8(
+@query(
     "events_autocorr_daily",
     oracle=f"""
     WITH daily AS (
@@ -3302,6 +3320,7 @@ _ACF_EXPR = (
     SELECT CAST(k AS BIGINT) AS k, n_pairs, num, den, {_ACF_EXPR} AS acf
     FROM agg, den_t
     """,
+    since=8,
 )
 def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..7 AUTOCORRELATION of the daily event-count series — the
@@ -3353,7 +3372,7 @@ def events_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOOT_B = 400
 
 
-@staged_r8(
+@query(
     "events_bootstrap_ci",
     oracle=f"""
     WITH daily AS (
@@ -3395,6 +3414,7 @@ _BOOT_B = 400
              AS covered
     FROM nn
     """,
+    since=8,
 )
 def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic BOOTSTRAP 95% confidence interval for the total
@@ -3488,7 +3508,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8(
+@query(
     "events_seq_patterns",
     oracle="""
     WITH per AS (
@@ -3511,6 +3531,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(support * 1000000 // n_users AS BIGINT) AS support_ppm
     FROM sup, u
     """,
+    since=8,
 )
 def events_seq_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern support — the ORDERED, NON-ADJACENT
@@ -3578,7 +3599,7 @@ _CHI_TERM = (
 )
 
 
-@staged_r8(
+@query(
     "events_chisq_independence",
     oracle=f"""
     WITH cell AS (
@@ -3611,6 +3632,7 @@ _CHI_TERM = (
            tot.chi2_x1000, tot.dof
     FROM t, tot
     """,
+    since=8,
 )
 def events_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square INDEPENDENCE test over the event_type × day-of-week
@@ -3676,7 +3698,7 @@ def events_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8(
+@query(
     "events_snaive_backtest",
     oracle="""
     WITH daily AS (
@@ -3707,6 +3729,7 @@ def events_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
            tot.n_days, tot.mae_cents, tot.wape_ppm
     FROM bt, tot
     """,
+    since=8,
 )
 def events_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive FORECAST with an honest BACKTEST — the
@@ -3763,7 +3786,7 @@ def events_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_mannwhitney_u",
     oracle="""
     WITH s AS (
@@ -3794,6 +3817,7 @@ def events_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // (2 * n_a * n_b) AS BIGINT) AS auc_ppm
     FROM agg
     """,
+    since=9,
 )
 def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U — the NONPARAMETRIC two-sample test the
@@ -3865,7 +3889,7 @@ def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_spearman_daily",
     oracle="""
     WITH daily AS (
@@ -3894,6 +3918,7 @@ def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // (4 * n * (n * n - 1)) AS BIGINT) AS rho_x1e6
     FROM agg
     """,
+    since=9,
 )
 def events_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman RANK correlation between daily revenue and daily
@@ -3957,7 +3982,7 @@ def events_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_wasserstein_drift",
     oracle="""
     WITH b AS (
@@ -3999,6 +4024,7 @@ def events_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT g.bucket, g.n_a, g.n_b, g.cdf_gap_ppm, emd.emd_ppm_buckets
     FROM g, emd
     """,
+    since=9,
 )
 def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth-mover) DISTRIBUTION drift between the
@@ -4064,7 +4090,7 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_theilsen_trend",
     oracle="""
     WITH daily AS (
@@ -4091,6 +4117,7 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS slope_hi_ppm
     FROM r
     """,
+    since=9,
 )
 def events_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen ROBUST trend — the median of all pairwise slopes of
@@ -4156,7 +4183,7 @@ def events_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_bot_regularity",
     oracle="""
     WITH g AS (
@@ -4184,6 +4211,7 @@ def events_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS too_regular
     FROM s
     """,
+    since=9,
 )
 def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOT-DETECTION timing screen — humans are bursty, schedulers are
@@ -4251,7 +4279,7 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_diff_in_diff",
     oracle="""
     WITH d AS (
@@ -4287,6 +4315,7 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((m.tp - m.tq) - (m.cp - m.cq) AS BIGINT) AS did_mcents
     FROM cells, m
     """,
+    since=9,
 )
 def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIFFERENCE-IN-DIFFERENCES — the 2x2 causal baseline the A/B
@@ -4356,7 +4385,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_max_drawdown",
     oracle="""
     WITH daily AS (
@@ -4386,6 +4415,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(drawdown * 1000000 // peak AS BIGINT) AS drawdown_ppm
     FROM best WHERE rn = 1
     """,
+    since=9,
 )
 def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAXIMUM DRAWDOWN — the peak-to-trough risk metric (finance's
@@ -4445,7 +4475,7 @@ def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_matched_pairs_att",
     oracle="""
     WITH u AS (
@@ -4483,6 +4513,7 @@ def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(y - c.cy) * 1000 // count(*) AS BIGINT) AS att_mcents
     FROM m
     """,
+    since=9,
 )
 def events_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCHED-PAIRS treatment effect — 1-nearest-neighbor covariate
@@ -4555,7 +4586,7 @@ def events_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_peak_concurrency",
     oracle=f"""
     WITH marked AS (
@@ -4604,6 +4635,7 @@ def events_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
            best.pos AS peak_at_us
     FROM best, n WHERE best.rn = 1
     """,
+    since=9,
 )
 def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PEAK CONCURRENCY — 'how many sessions were open at once, and
@@ -4674,7 +4706,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_ks_test",
     oracle="""
     WITH s AS (
@@ -4713,6 +4745,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
            cents AS at_cents
     FROM best WHERE rn = 1
     """,
+    since=9,
 )
 def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KOLMOGOROV-SMIRNOV distance between the click and
@@ -4790,7 +4823,7 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 _K_ANON = 5
 
 
-@staged_r9(
+@query(
     "events_k_anonymity",
     oracle=f"""
     WITH q AS (
@@ -4815,6 +4848,7 @@ _K_ANON = 5
            CAST(min(size) AS BIGINT) AS min_class_size
     FROM cls
     """,
+    since=9,
 )
 def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-ANONYMITY audit — the privacy gate a release pipeline runs
@@ -4872,7 +4906,7 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_bitmap_retention",
     oracle=f"""
     WITH q AS (
@@ -4897,6 +4931,7 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS retained_ppm
     FROM a LEFT JOIN r ON r.day = a.day
     """,
+    since=9,
 )
 def events_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITMAP-INDEX retention — day-over-day retained users computed
@@ -4963,7 +4998,7 @@ def events_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_kendall_tau",
     oracle=f"""
     WITH daily AS (
@@ -4996,6 +5031,7 @@ def events_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS tau_a_ppm
     FROM agg
     """,
+    since=9,
 )
 def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KENDALL rank correlation between daily event volume and daily
@@ -5079,7 +5115,7 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_sax_motifs",
     oracle=f"""
     WITH daily AS (
@@ -5121,6 +5157,7 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE w1 = week + 1 AND w2 = week + 2
     GROUP BY motif
     """,
+    since=9,
 )
 def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAX SYMBOLIZATION + MOTIF MINING — the time-series pattern-
@@ -5198,7 +5235,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_hilbert_layout",
     oracle=f"""
     WITH cells AS (
@@ -5282,6 +5319,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_steps
     FROM steps WHERE sd IS NOT NULL GROUP BY curve, sd
     """,
+    since=9,
 )
 def events_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HILBERT-CURVE data layout vs Z-ORDER — the space-filling-curve
@@ -5400,7 +5438,7 @@ def events_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_cuped_adjustment",
     oracle=f"""
     WITH d AS (
@@ -5440,6 +5478,7 @@ def events_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_user g, theta t
     GROUP BY g.grp
     """,
+    since=9,
 )
 def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED — Controlled-experiment Using Pre-Experiment Data, the
@@ -5531,7 +5570,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9(
+@query(
     "events_interval_scheduling",
     oracle="""
     WITH RECURSIVE iv AS (
@@ -5570,6 +5609,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN walk w ON w.user_id = nn.user_id
     GROUP BY nn.user_id, nn.n_intervals
     """,
+    since=9,
 )
 def events_interval_scheduling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GREEDY INTERVAL SCHEDULING — earliest-end-first, the provably
@@ -5635,10 +5675,8 @@ def events_interval_scheduling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Qini uplift curve (incremental-impact evaluation by targeting decile)
 # ---------------------------------------------------------------------------
 
-from virapipe_spark.queries.staged import staged_r10  # noqa: E402
 
-
-@staged_r10(
+@query(
     "events_qini_uplift",
     oracle=f"""
     WITH d AS (
@@ -5684,6 +5722,7 @@ from virapipe_spark.queries.staged import staged_r10  # noqa: E402
              / n_c_cum AS qini
     FROM cum
     """,
+    since=10,
 )
 def events_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QINI CURVE — the uplift-model evaluation standard (Radcliffe):
@@ -5839,7 +5878,7 @@ def _mg_oracle() -> str:
     """
 
 
-@staged_r10("events_misra_gries", oracle=_mg_oracle())
+@query("events_misra_gries", oracle=_mg_oracle(), since=10)
 def events_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MISRA-GRIES heavy hitters — the deterministic frequency sketch
     with the guaranteed-superset property (every item with frequency
@@ -5993,7 +6032,7 @@ def _grid_oracle() -> str:
     """
 
 
-@staged_r10("events_grid_nn_join", oracle=_grid_oracle())
+@query("events_grid_nn_join", oracle=_grid_oracle(), since=10)
 def events_grid_nn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOUNDED NEAREST NEIGHBOR by GRID BUCKETING — the 2-D spatial
     join every geo pipeline runs (store-to-customer assignment, GPS
@@ -6177,7 +6216,7 @@ def _ols_oracle() -> str:
     """
 
 
-@staged_r10("events_ols_cramer", oracle=_ols_oracle())
+@query("events_ols_cramer", oracle=_ols_oracle(), since=10)
 def events_ols_cramer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLOSED-FORM MULTIPLE REGRESSION — ordinary least squares fit of
     daily revenue on [intercept, day trend, weekend indicator], solved
@@ -6337,7 +6376,7 @@ def _iso_oracle() -> str:
     """
 
 
-@staged_r10("events_isotonic_daily", oracle=_iso_oracle())
+@query("events_isotonic_daily", oracle=_iso_oracle(), since=10)
 def events_isotonic_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISOTONIC REGRESSION — the shape-constrained fit (monotone
     calibration of model scores, dose-response curves, conversion-vs-
@@ -6545,7 +6584,7 @@ reverse(aggregate(sequence(2, size(a)),
 """
 
 
-@staged_r10("events_viterbi_burst", oracle=_vit_oracle())
+@query("events_viterbi_burst", oracle=_vit_oracle(), since=10)
 def events_viterbi_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN-SUM VITERBI DECODING — the MAP state path of a two-state
     burst model over the daily series (Kleinberg's burst automaton

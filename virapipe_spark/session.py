@@ -49,11 +49,11 @@ def session(
 ) -> SparkSession:
     """Build (or get) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured. ``shuffle_partitions`` defaults
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    machine's core count) when no cluster master is configured. ``shuffle_partitions`` defaults
     to the local core count — on a real cluster pass ~2-3x total cores.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
